@@ -454,54 +454,19 @@ def main() -> None:
     # cold numbers run-order dependent and incomparable across
     # reorderings.  Eager materialization inside each shared_* builder
     # means the call itself performs the build.
-    shared_builds: dict[str, float] = {}
+    # queries() above imported every operator module, so the registry
+    # holds every @shared_build builder.
+    from dblab_ece_trino_spark.session import SHARED_BUILDS
 
-    def _time_build(label: str, thunk) -> None:
+    shared_builds: dict[str, float] = {}
+    for label, build in SHARED_BUILDS.items():
         t0 = time.monotonic()
         try:
-            thunk()
+            build(spark, sf_dir)
         except Exception as exc:  # build failure must not kill the bench
             print(f"# shared build {label} failed: {exc}", file=sys.stderr)
-            return
+            continue
         shared_builds[label] = round(time.monotonic() - t0, 3)
-
-    from dblab_ece_trino_spark.operators.dedup import (
-        shared_minhash_clusters,
-        shared_shingle_index,
-    )
-    from dblab_ece_trino_spark.operators.graph import shared_coorder_pairs
-    from dblab_ece_trino_spark.operators.similarity import (
-        shared_ivf_build,
-        shared_quant_build,
-    )
-
-    _time_build(
-        "coorder_pairs", lambda: shared_coorder_pairs(spark, sf_dir)
-    )
-    _time_build(
-        "minhash_clusters", lambda: shared_minhash_clusters(spark, sf_dir)
-    )
-    _time_build("ivf_build", lambda: shared_ivf_build(spark, sf_dir))
-    _time_build("quant_codes", lambda: shared_quant_build(spark, sf_dir))
-    # round-16: the df-ranked char-9 shingle index shared by the
-    # prefix-filter and containment similarity joins
-    _time_build(
-        "shingle9_index", lambda: shared_shingle_index(spark, sf_dir)
-    )
-    # round-16: the (l_returnflag, cents) histogram + cumulative rank
-    # shared by the winsorize / MAD / boxplot percentile family
-    from dblab_ece_trino_spark.operators.analytics import shared_price_cum
-
-    _time_build("price_cum", lambda: shared_price_cum(spark, sf_dir))
-    # round-17: the duplicated-span island frame shared by the
-    # coverage and removal halves of exact-substring dedup
-    from dblab_ece_trino_spark.operators.llmprep import (
-        shared_dupspan_islands,
-    )
-
-    _time_build(
-        "dupspan_islands", lambda: shared_dupspan_islands(spark, sf_dir)
-    )
     print(f"# shared builds: {shared_builds}", file=sys.stderr)
 
     # PASS 1 — whole-suite warmup (round-13 verdict item 2): every

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from dblab_ece_trino_spark.operators.registry import register, register_sql
 from dblab_ece_trino_spark.queries import _ORACLE_TABLES, _SPARK_TABLES
+from dblab_ece_trino_spark.session import shared_build
 
 
 def _both(name: str, spark_tpl: str, oracle_tpl: str | None = None) -> None:
@@ -742,11 +743,7 @@ def grouped_disc_thresholds(vf, group_col, value_col, fracs, shards=None):
     )
 
 
-import weakref
-
-_PRICE_CUM_SHARED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
+@shared_build("price_cum")
 def shared_price_cum(spark, sf_dir):
     """ONE (l_returnflag, price-cents) weighted histogram + its ranked
     cumulative frame, cached per (session, sf_dir) — the
@@ -765,25 +762,19 @@ def shared_price_cum(spark, sf_dir):
     from dblab_ece_trino_spark.entrypoints import engine_for
     from dblab_ece_trino_spark.session import materialize
 
-    per = _PRICE_CUM_SHARED.get(spark)
-    if per is None:
-        per = {}
-        _PRICE_CUM_SHARED[spark] = per
-    if sf_dir not in per:
-        li = engine_for(spark, sf_dir).catalogs.table("psql.tpch.lineitem")
-        vf = materialize(
-            li.select(
-                "l_returnflag",
-                F.expr(
-                    "CAST(round(l_extendedprice * 100, 0) AS BIGINT)"
-                ).alias("c"),
-            )
-            .groupBy("l_returnflag", "c")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+    li = engine_for(spark, sf_dir).catalogs.table("psql.tpch.lineitem")
+    vf = materialize(
+        li.select(
+            "l_returnflag",
+            F.expr(
+                "CAST(round(l_extendedprice * 100, 0) AS BIGINT)"
+            ).alias("c"),
         )
-        cum = materialize(grouped_cum_rank(vf, "l_returnflag", "c"))
-        per[sf_dir] = (vf, cum)
-    return per[sf_dir]
+        .groupBy("l_returnflag", "c")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    cum = materialize(grouped_cum_rank(vf, "l_returnflag", "c"))
+    return vf, cum
 
 
 # Robust dispersion: median absolute deviation with a 3-MAD outlier

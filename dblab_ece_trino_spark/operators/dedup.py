@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dblab_ece_trino_spark.operators.registry import register
+from dblab_ece_trino_spark.session import shared_build
 
 # ------------------------------------------------------------------ shingles
 def char_shingles(text: Column, n: int = 5) -> Column:
@@ -201,6 +202,7 @@ def _minhash_fold_kernel(src: DataFrame, num_hashes: int) -> DataFrame:
     """
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     mask = (1 << 64) - 1
     p1 = 0x9E3779B185EBCA87
@@ -260,7 +262,12 @@ def _minhash_fold_kernel(src: DataFrame, num_hashes: int) -> DataFrame:
                 {"sid": pdf["sid"], "sig": [sig_t[i] for i in range(nrow)]}
             )
 
-    return src.mapInPandas(gen, "sid long, sig array<bigint>")
+    # the JVM path's schema: sid keeps the id column's own type, and
+    # sig elements are never null
+    out = StructType(
+        [src.schema["sid"], StructField("sig", ArrayType(LongType(), False))]
+    )
+    return src.mapInPandas(gen, out)
 
 
 def minhash_signatures(
@@ -725,13 +732,7 @@ register(
 )
 
 
-import weakref
-
-_CLUSTER_SHARED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
+@shared_build("minhash_clusters")
 def shared_minhash_clusters(
     spark: SparkSession, sf_dir: str, threshold: float = 0.7
 ):
@@ -749,20 +750,12 @@ def shared_minhash_clusters(
     """
     from dblab_ece_trino_spark.session import materialize
 
-    per = _CLUSTER_SHARED.get(spark)
-    if per is None:
-        per = {}
-        _CLUSTER_SHARED[spark] = per
-    key = (sf_dir, threshold)
-    if key not in per:
-        pairs = materialize(
-            dedup_minhash_lsh(
-                _docs(spark, sf_dir), threshold=threshold, max_bucket=None
-            )
+    pairs = materialize(
+        dedup_minhash_lsh(
+            _docs(spark, sf_dir), threshold=threshold, max_bucket=None
         )
-        labels = materialize(dedup_clusters(pairs))
-        per[key] = (pairs, labels)
-    return per[key]
+    )
+    return pairs, materialize(dedup_clusters(pairs))
 
 
 def _q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1350,11 +1343,6 @@ register("dedup_cluster_keep", _q_cluster_keep, oracle=_CLUSTER_KEEP_ORACLE)
 
 
 # -------------------------------------------------- prefix-filter all-pairs
-_SHINGLE9_SHARED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _verify_intersect_sorted(joined: DataFrame) -> DataFrame:
     """Exact per-pair set-intersection counts over a joined candidate
     frame (id_a, id_b, arr_a, arr_b) whose arrays are SORTED distinct
@@ -1417,6 +1405,7 @@ def _verify_intersect_sorted(joined: DataFrame) -> DataFrame:
     )
 
 
+@shared_build("shingle9_index")
 def shared_shingle_index(
     spark: SparkSession, sf_dir: str, n: int = 9
 ) -> tuple:
@@ -1446,44 +1435,37 @@ def shared_shingle_index(
 
     from dblab_ece_trino_spark.session import ensure_parallelism, materialize
 
-    per = _SHINGLE9_SHARED.get(spark)
-    if per is None:
-        per = {}
-        _SHINGLE9_SHARED[spark] = per
-    key = (sf_dir, n)
-    if key not in per:
-        docs = _docs(spark, sf_dir)
-        sig = materialize(
-            ensure_parallelism(
-                docs.select(
-                    F.col("doc_id").alias("sid"),
-                    # sorted: the verify kernel binary-searches the
-                    # arrays; set semantics are order-invariant
-                    F.sort_array(
-                        F.transform(
-                            shingles(F.col("text"), n, "char"),
-                            lambda s: F.xxhash64(s),
-                        )
-                    ).alias("arr"),
-                )
+    docs = _docs(spark, sf_dir)
+    sig = materialize(
+        ensure_parallelism(
+            docs.select(
+                F.col("doc_id").alias("sid"),
+                # sorted: the verify kernel binary-searches the
+                # arrays; set semantics are order-invariant
+                F.sort_array(
+                    F.transform(
+                        shingles(F.col("text"), n, "char"),
+                        lambda s: F.xxhash64(s),
+                    )
+                ).alias("arr"),
             )
         )
-        sh = sig.select(
-            "sid", F.size("arr").alias("sz"), F.explode("arr").alias("shingle")
+    )
+    sh = sig.select(
+        "sid", F.size("arr").alias("sz"), F.explode("arr").alias("shingle")
+    )
+    dfc = sh.groupBy("shingle").agg(F.count("*").alias("df"))
+    ranked = materialize(
+        sh.join(dfc, "shingle")
+        .withColumn(
+            "rnk",
+            F.row_number().over(
+                Window.partitionBy("sid").orderBy("df", "shingle")
+            ),
         )
-        dfc = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-        ranked = materialize(
-            sh.join(dfc, "shingle")
-            .withColumn(
-                "rnk",
-                F.row_number().over(
-                    Window.partitionBy("sid").orderBy("df", "shingle")
-                ),
-            )
-            .select("sid", "shingle", "rnk", "sz")
-        )
-        per[key] = (sig, ranked)
-    return per[key]
+        .select("sid", "shingle", "rnk", "sz")
+    )
+    return sig, ranked
 
 
 def prefix_filter_pairs(

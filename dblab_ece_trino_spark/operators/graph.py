@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dblab_ece_trino_spark.operators.registry import register
+from dblab_ece_trino_spark.session import shared_build
 
 PR_SCALE = 10**12
 PR_ITERS = 5
@@ -262,13 +263,7 @@ def _li(spark: SparkSession, sf_dir: str) -> DataFrame:
     return engine_for(spark, sf_dir).catalogs.table("psql.tpch.lineitem")
 
 
-import weakref
-
-_PAIRS_SHARED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
+@shared_build("coorder_pairs")
 def shared_coorder_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE materialized co-order edge build per (session, sf_dir) —
     the shared_minhash_clusters / shared_ivf_build precedent applied
@@ -285,13 +280,7 @@ def shared_coorder_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from dblab_ece_trino_spark.session import materialize
 
-    per = _PAIRS_SHARED.get(spark)
-    if per is None:
-        per = {}
-        _PAIRS_SHARED[spark] = per
-    if sf_dir not in per:
-        per[sf_dir] = materialize(coorder_pairs(_li(spark, sf_dir)))
-    return per[sf_dir]
+    return materialize(coorder_pairs(_li(spark, sf_dir)))
 
 
 def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,13 +16,12 @@ LLM-pipeline surface SURVEY §6 plans as first-class).  Design rules:
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dblab_ece_trino_spark.operators.registry import register
 from dblab_ece_trino_spark.operators.dedup import word_shingles
+from dblab_ece_trino_spark.session import shared_build
 
 
 def _toks(text: Column) -> Column:
@@ -2502,11 +2501,7 @@ def _dupspan_islands(
     )
 
 
-_DUPSPAN_SHARED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
+@shared_build("dupspan_islands")
 def shared_dupspan_islands(
     spark: SparkSession, sf_dir: str, n: int = 8
 ) -> DataFrame:
@@ -2528,16 +2523,9 @@ def shared_dupspan_islands(
     (bounded by anchor count, far below token count) is materialized
     so cached references stay valid for the life of the session.
     """
-    per = _DUPSPAN_SHARED.get(spark)
-    if per is None:
-        per = {}
-        _DUPSPAN_SHARED[spark] = per
-    key = (sf_dir, n)
-    if key not in per:
-        from dblab_ece_trino_spark.session import materialize
+    from dblab_ece_trino_spark.session import materialize
 
-        per[key] = materialize(_dupspan_islands(_docs(spark, sf_dir), n=n))
-    return per[key]
+    return materialize(_dupspan_islands(_docs(spark, sf_dir), n=n))
 
 
 def dup_span_coverage(
@@ -2573,6 +2561,13 @@ def dup_span_coverage(
     per-island cov_len = m - s + n summed per document (islands are
     disjoint, so the sum is the exact merged-interval coverage, the
     same integers the per-island groupBy produced before).
+
+    PROVENANCE CONTRACT: an injected ``islands`` frame MUST have been
+    built by ``_dupspan_islands`` / ``shared_dupspan_islands`` over the
+    same docs with the same (id_col, text_col, n) — nothing validates
+    that here, and a mismatched injection (e.g. islands built with n=8
+    passed alongside n=4) silently yields wrong results.  Callers other
+    than the registered entries should pass docs only.
     """
     toks = docs.select(
         F.col(id_col),
@@ -2707,6 +2702,13 @@ def dup_span_removal(
     O(tokens × islands) worry is theoretical here because merged
     islands per document are near 1, so the exists() scan is
     effectively O(tokens) integer compares.
+
+    PROVENANCE CONTRACT: an injected ``islands`` frame MUST have been
+    built by ``_dupspan_islands`` / ``shared_dupspan_islands`` over the
+    same docs with the same (id_col, text_col, n) — nothing validates
+    that here, and a mismatched injection (e.g. islands built with n=8
+    passed alongside n=4) silently yields wrong results.  Callers other
+    than the registered entries should pass docs only.
     """
     toks = docs.select(
         F.col(id_col), _toks(F.col(text_col)).alias("arr")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from dblab_ece_trino_spark.operators.dedup import cosine
 from dblab_ece_trino_spark.operators.registry import register
+from dblab_ece_trino_spark.session import shared_build
 
 
 def _as_double(vec: Column) -> Column:
@@ -422,17 +423,7 @@ def knn_ivf(
     )
 
 
-import weakref
-
-_IVF_SHARED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-_QUANT_SHARED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
+@shared_build("quant_codes")
 def shared_quant_build(spark: SparkSession, sf_dir: str, levels: int = 255):
     """ONE global scalar-quantization build per (session, sf_dir) — the
     shared_ivf_build / shared_coorder_pairs precedent applied to the
@@ -457,50 +448,44 @@ def shared_quant_build(spark: SparkSession, sf_dir: str, levels: int = 255):
     """
     from dblab_ece_trino_spark.session import ensure_parallelism, materialize
 
-    per = _QUANT_SHARED.get(spark)
-    if per is None:
-        per = {}
-        _QUANT_SHARED[spark] = per
-    key = (sf_dir, levels)
-    if key not in per:
-        corpus = ensure_parallelism(_emb(spark, sf_dir))
-        row = (
-            corpus.select(_as_double(F.col("embedding")).alias("v"))
-            .agg(
-                F.min(F.array_min("v")).alias("mn"),
-                F.max(F.array_max("v")).alias("mx"),
-            )
-            .collect()[0]
+    corpus = ensure_parallelism(_emb(spark, sf_dir))
+    row = (
+        corpus.select(_as_double(F.col("embedding")).alias("v"))
+        .agg(
+            F.min(F.array_min("v")).alias("mn"),
+            F.max(F.array_max("v")).alias("mx"),
         )
-        mn, mx = float(row["mn"]), float(row["mx"])
-        s_unit = (mx - mn) / float(levels)
-        mid = (mn + mx) / 2.0
+        .collect()[0]
+    )
+    mn, mx = float(row["mn"]), float(row["mx"])
+    s_unit = (mx - mn) / float(levels)
+    mid = (mn + mx) / 2.0
 
-        def q(anchor):
-            return F.transform(
-                _as_double(F.col("embedding")),
-                lambda x: F.floor(
-                    (x - F.lit(anchor)) / F.lit(s_unit) + F.lit(0.5)
-                ).cast("long"),
-            )
-
-        anchored = materialize(
-            corpus.select(
-                F.col("vec_id").alias("cid"), q(mn).alias("cc")
-            ).withColumn(
-                "sum_c",
-                F.aggregate(
-                    F.col("cc"), F.lit(0).cast("long"), lambda a, v: a + v
-                ),
-            )
+    def q(anchor):
+        return F.transform(
+            _as_double(F.col("embedding")),
+            lambda x: F.floor(
+                (x - F.lit(anchor)) / F.lit(s_unit) + F.lit(0.5)
+            ).cast("long"),
         )
-        centered = materialize(
-            corpus.select(F.col("vec_id").alias("cid"), q(mid).alias("cc"))
+
+    anchored = materialize(
+        corpus.select(
+            F.col("vec_id").alias("cid"), q(mn).alias("cc")
+        ).withColumn(
+            "sum_c",
+            F.aggregate(
+                F.col("cc"), F.lit(0).cast("long"), lambda a, v: a + v
+            ),
         )
-        per[key] = (mn, mx, anchored, centered)
-    return per[key]
+    )
+    centered = materialize(
+        corpus.select(F.col("vec_id").alias("cid"), q(mid).alias("cc"))
+    )
+    return mn, mx, anchored, centered
 
 
+@shared_build("ivf_build")
 def shared_ivf_build(
     spark: SparkSession,
     sf_dir: str,
@@ -521,29 +506,22 @@ def shared_ivf_build(
     """
     from dblab_ece_trino_spark.session import ensure_parallelism, materialize
 
-    per = _IVF_SHARED.get(spark)
-    if per is None:
-        per = {}
-        _IVF_SHARED[spark] = per
-    key = (sf_dir, k, n_clusters, iters)
-    if key not in per:
-        emb = _emb(spark, sf_dir)
-        queries = materialize(emb.filter(F.col("vec_id") < 10))
-        centroids = ivf_index(emb, n_clusters, iters)
-        v = materialize(
-            ensure_parallelism(emb).select(
-                F.col("vec_id").alias("vid"),
-                _as_double(F.col("embedding")).alias("cv"),
-            )
+    emb = _emb(spark, sf_dir)
+    queries = materialize(emb.filter(F.col("vec_id") < 10))
+    centroids = ivf_index(emb, n_clusters, iters)
+    v = materialize(
+        ensure_parallelism(emb).select(
+            F.col("vec_id").alias("vid"),
+            _as_double(F.col("embedding")).alias("cv"),
         )
-        cells = materialize(
-            _assign(v, centroids)
-            .withColumnRenamed("vid", "cid")
-            .withColumnRenamed("cv", "ccv")
-        )
-        bf = materialize(knn_bruteforce(emb, queries, k=k))
-        per[key] = (emb, queries, centroids, cells, bf)
-    return per[key]
+    )
+    cells = materialize(
+        _assign(v, centroids)
+        .withColumnRenamed("vid", "cid")
+        .withColumnRenamed("cv", "ccv")
+    )
+    bf = materialize(knn_bruteforce(emb, queries, k=k))
+    return emb, queries, centroids, cells, bf
 
 
 def _q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:

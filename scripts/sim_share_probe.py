@@ -73,12 +73,10 @@ def main() -> None:
 
     import __spark_entry__ as e
     from dblab_ece_trino_spark.operators.similarity import (
-        _IVF_SHARED,
-        _QUANT_SHARED,
         shared_ivf_build,
         shared_quant_build,
     )
-    from dblab_ece_trino_spark.session import EngineSession
+    from dblab_ece_trino_spark.session import EngineSession, drop_shared_builds
 
     eng = EngineSession.get(app_name="sim_share_probe")
     spark = eng.spark
@@ -87,34 +85,9 @@ def main() -> None:
     qs = e.queries()
 
     def drop_caches() -> None:
-        # Unpersist the checkpointed frames BEFORE dropping the dict
-        # references: per.clear() alone leaves each stale build's
-        # localCheckpoint blocks in executor storage until JVM GC, so
-        # the per-entry arm would accumulate ~7 dead builds' blocks of
-        # memory pressure and bias its own numbers upward (r15 ADVICE
-        # item — the bias overstated the shared-build ratio).
-        import gc
-
-        def unpersist_checkpoint(df) -> None:
-            # a materialized frame is a LogicalRDD over the checkpoint
-            # RDD — unpersist THAT rdd (df.rdd would wrap it in a fresh
-            # MapPartitionsRDD whose unpersist is a no-op on the blocks)
-            try:
-                plan = df._jdf.queryExecution().optimizedPlan()
-                if plan.getClass().getSimpleName() == "LogicalRDD":
-                    plan.rdd().unpersist(False)
-            except Exception:
-                pass
-
-        for store in (_IVF_SHARED, _QUANT_SHARED):
-            per = store.get(spark)
-            if per is not None:
-                for built in per.values():
-                    frames = built if isinstance(built, tuple) else (built,)
-                    for df in frames:
-                        unpersist_checkpoint(df)
-                per.clear()
-        gc.collect()
+        # unpersists the stale builds' checkpoints, not just forgets
+        # them, so the per-entry arm carries no dead blocks (r15 ADVICE)
+        drop_shared_builds(spark, "ivf_build", "quant_codes")
 
     def run_entry(name: str) -> float:
         t0 = time.monotonic()

@@ -97,19 +97,16 @@ def main() -> None:
     sf_dir = OUT.format(n=scale)
 
     import __spark_entry__ as e
-    from dblab_ece_trino_spark.operators.graph import (
-        _PAIRS_SHARED,
-        shared_coorder_pairs,
-    )
-    from dblab_ece_trino_spark.session import EngineSession
+    from dblab_ece_trino_spark.operators.graph import shared_coorder_pairs
+    from dblab_ece_trino_spark.session import EngineSession, drop_shared_builds
 
     spark = EngineSession.get(app_name="zipf_graph_family").spark
     qs = e.queries()
 
     def drop_cache() -> None:
-        per = _PAIRS_SHARED.get(spark)
-        if per is not None:
-            per.pop(sf_dir, None)
+        # unpersists the stale build's checkpoint, not just forgets it,
+        # so the per-entry arm carries no dead blocks (r15 ADVICE)
+        drop_shared_builds(spark, "coorder_pairs")
 
     def run_entry(name: str) -> float:
         t0 = time.monotonic()

@@ -317,3 +317,55 @@ def test_materialize_membership_short_circuit(spark):
     alien_plan = alien._jdf.queryExecution().optimizedPlan()
     if alien_plan.getClass().getSimpleName() == "LogicalRDD":
         assert materialize(alien) is not alien
+
+
+def test_shared_build_keys_on_bound_arguments_per_session(spark):
+    """One @shared_build cache: a call that spells out a default hits
+    the same build; another SparkSession gets its own, equal build."""
+    from dblab_ece_trino_spark.operators.similarity import shared_quant_build
+    from dblab_ece_trino_spark.session import drop_shared_builds
+
+    built = shared_quant_build(spark, SF_SMALL)
+    assert shared_quant_build(spark, SF_SMALL, levels=255) is built
+    other = spark.newSession()
+    theirs = shared_quant_build(other, SF_SMALL)
+    assert theirs is not built
+    assert theirs[:2] == built[:2]  # (mn, mx)
+    for mine, their in zip(built[2:], theirs[2:]):
+        assert sorted(their.collect()) == sorted(mine.collect())
+    drop_shared_builds(other, "quant_codes")
+
+
+def test_drop_shared_builds_forces_rebuild_of_named_only(spark):
+    from dblab_ece_trino_spark.operators.analytics import shared_price_cum
+    from dblab_ece_trino_spark.operators.similarity import shared_quant_build
+    from dblab_ece_trino_spark.session import drop_shared_builds
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    quant = shared_quant_build(spark, SF_SMALL)
+    price = shared_price_cum(spark, SF_SMALL)
+    ckpts = {
+        f._jdf.queryExecution().optimizedPlan().rdd().id() for f in quant[2:]
+    }
+    assert ckpts <= persisted()
+    drop_shared_builds(spark, "quant_codes")
+    assert not ckpts & persisted()  # unpersisted, not just forgotten
+    rebuilt = shared_quant_build(spark, SF_SMALL)
+    assert rebuilt is not quant and rebuilt[:2] == quant[:2]
+    assert shared_price_cum(spark, SF_SMALL) is price
+
+
+def test_shared_build_names_are_the_bench_record_labels():
+    """bench.py records one time per registered build under its name;
+    scripts/bench_diff.py compares those keys across records (see
+    BENCH_LOCAL_r18.json), so the names must not drift."""
+    from dblab_ece_trino_spark.operators.registry import spark_queries
+    from dblab_ece_trino_spark.session import SHARED_BUILDS
+
+    spark_queries()  # imports every operator module
+    assert set(SHARED_BUILDS) == {
+        "coorder_pairs", "minhash_clusters", "ivf_build", "quant_codes",
+        "shingle9_index", "price_cum", "dupspan_islands",
+    }

@@ -162,7 +162,10 @@ def test_minhash_kernel_sigs_equal_jvm(spark):
     """The Arrow minhash fold kernel must reproduce the JVM
     aggregate/zip_with fold BIT-FOR-BIT — signed minima of the salted
     xxhash64 family — at doc grain (word mode, long shingle arrays)
-    and at chunk grain (the shipped consumer)."""
+    and at chunk grain (the shipped consumer).  Small int-id and
+    string-id frames pin the output schema (sid keeps the id type) and
+    null text: the shingle expressions give a null text a one-element
+    array, so both paths return the same non-null signature for it."""
     from dblab_ece_trino_spark.operators.dedup import (
         _docs,
         chunk_units,
@@ -186,6 +189,25 @@ def test_minhash_kernel_sigs_equal_jvm(spark):
         }
         assert jvm == ker
         assert jvm, "empty signature frame"
+
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over a lazy cat"),
+        (3, None),
+    ]
+    for schema, ids in (("doc_id int, text string", int),
+                        ("doc_id string, text string", str)):
+        small = spark.createDataFrame(
+            [(ids(i), t) for i, t in rows], schema
+        )
+        for mode in ("word", "char"):
+            jvm_df = minhash_signatures(small, mode=mode)
+            ker_df = minhash_signatures(small, mode=mode, kernel=True)
+            assert ker_df.schema == jvm_df.schema, (schema, mode)
+            jvm_rows = sorted(jvm_df.collect())
+            assert sorted(ker_df.collect()) == jvm_rows, (schema, mode)
+            null_sig = [r["sig"] for r in jvm_rows if r["sid"] == ids(3)]
+            assert null_sig and null_sig[0] is not None, (schema, mode)
 
 
 def test_chunk_neardup_kernel_matches_oracle(spark, duck):
