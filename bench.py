@@ -551,7 +551,17 @@ def main() -> None:
         # loop so 'cold' figures stay run-order independent (r14 advice)
         "shared_builds": shared_builds,
     }
-    with open(os.path.join(repo, local_name), "w") as fh:
+    # exclusive create: a record never overwrites another; a taken name
+    # gets the first free _<k> suffix
+    stem, k = local_name[: -len(".json")], 1
+    while True:
+        try:
+            fh = open(os.path.join(repo, local_name), "x")
+            break
+        except FileExistsError:
+            local_name = f"{stem}_{k}.json"
+            k += 1
+    with fh:
         json.dump(full, fh, indent=1, sort_keys=True)
         fh.write("\n")
     print(f"# full record written to {local_name}", file=sys.stderr)

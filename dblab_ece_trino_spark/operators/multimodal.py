@@ -23,12 +23,17 @@ Design for image/audio/video at 100 TB:
   encoded gradient images round-trip through the Arrow stage and the
   reported pixel sums are checked by DuckDB computing the same sums
   from the gradient formula — the oracle never touches the bytes.
+- the native codec entries are table-driven: one ``CodecSpec`` row per
+  entry (``CODECS``), consumed by one path (``codec_frame``) that
+  generates and decodes a row's fixtures in a single mapInPandas over
+  one partition.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -322,6 +327,77 @@ def resize_media(
     return media.mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
+# ------------------------------------------------------- codec spec table
+@dataclass(frozen=True)
+class CodecSpec:
+    """One row of the codec table (``CODECS``, at the end of this module).
+
+    ``payload(i)`` encodes fixture ``i`` (0 <= i < n) to real bytes;
+    ``stats(media_id, payload)`` decodes one payload into output row
+    tuples; ``schema`` is the output DDL (``NOT NULL`` marks a
+    non-nullable column); ``sort`` orders the entry's rows.  A
+    fingerprint row (``sort=()``) feeds its frame to ``pairs``, and the
+    registered entry returns the pair frame."""
+
+    name: str
+    n: int
+    payload: Callable[[int], bytes]
+    stats: Callable[[int, bytes], list]
+    schema: str
+    oracle: str | None = None
+    sort: tuple = ("media_id",)
+    pairs: Callable[[DataFrame], DataFrame] | None = None
+
+
+def _map_stats(frame: DataFrame, spec: CodecSpec, items) -> DataFrame:
+    """The codec path's one Python operator: ``items(pdf)`` yields a
+    batch's (media_id, payload) pairs, and each pair becomes
+    ``spec.stats`` rows."""
+    schema = T.StructType.fromDDL(spec.schema)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                r for mid, p in items(pdf) for r in spec.stats(int(mid), bytes(p))
+            ]
+            yield pd.DataFrame(rows, columns=schema.names)
+
+    return frame.mapInPandas(run, schema)
+
+
+def codec_frame(spark: SparkSession, spec: CodecSpec) -> DataFrame:
+    """Generate ``spec``'s fixtures and decode them in ONE Python
+    operator over one partition: a handful of payloads needs one task,
+    and a single input partition lets the sort run without an exchange."""
+    ids = spark.range(spec.n, numPartitions=1)
+    df = _map_stats(
+        ids, spec, lambda pdf: ((i, spec.payload(int(i))) for i in pdf["id"])
+    )
+    return df.orderBy(*spec.sort) if spec.sort else df
+
+
+def decode_stats(media: DataFrame, spec: CodecSpec) -> DataFrame:
+    """Apply ``spec``'s row function to any ``(media_id, payload)`` frame."""
+    return _map_stats(
+        media, spec, lambda pdf: zip(pdf["media_id"], pdf["payload"])
+    )
+
+
+def _pinned_oracle(schema: str, rows) -> str:
+    """Oracle over pinned expected rows: VALUES column k cast to field
+    k's type in ``schema`` (string columns stay uncast)."""
+    cols = []
+    for k, field in enumerate(schema.split(",")):
+        name, typ = field.split()[:2]
+        cols.append(
+            f"col{k} AS {name}" if typ == "string"
+            else f"CAST(col{k} AS {typ.upper()}) AS {name}"
+        )
+    return "SELECT " + ", ".join(cols) + " FROM (VALUES " + ", ".join(
+        str(r) for r in rows
+    ) + ") ORDER BY media_id"
+
+
 # ------------------------------------------------------------ query entries
 def _q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dblab_ece_trino_spark.entrypoints import engine_for
@@ -486,73 +562,36 @@ def resize_nearest(arr, out_w: int, out_h: int):
     return arr[ys][:, xs]
 
 
-_PPM_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-    ]
+_PPM_SCHEMA = (
+    "media_id bigint NOT NULL, width int, height int,"
+    " sum_r bigint, sum_g bigint, sum_b bigint"
 )
 
 _N_PPM = 20
 
 
-def _ppm_payloads(spark: SparkSession, n: int = _N_PPM) -> DataFrame:
-    """n deterministic gradient images as REAL P6 payloads; dims and the
-    per-pixel formula are shared with the oracle's closed form."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                w, h = 16 + i % 5, 12 + i % 3
-                payload = encode_ppm(
-                    w,
-                    h,
-                    lambda x, y, i=i: (
-                        (x * 7 + y * 3 + i) % 256,
-                        (x * 5 + y * 11 + 2 * i) % 256,
-                        (x + y + 3 * i) % 256,
-                    ),
-                )
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(
-        gen, "media_id long, payload binary"
+def _ppm_payload(i: int) -> bytes:
+    """Gradient image i as a REAL P6 payload; dims and the per-pixel
+    formula are shared with the oracle's closed form."""
+    return encode_ppm(
+        16 + i % 5,
+        12 + i % 3,
+        lambda x, y: (
+            (x * 7 + y * 3 + i) % 256,
+            (x * 5 + y * 11 + 2 * i) % 256,
+            (x + y + 3 * i) % 256,
+        ),
     )
 
 
-def ppm_pixel_stats(media: DataFrame) -> DataFrame:
-    """Decode real PPM payloads and report exact per-channel pixel sums."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, arr = decode_ppm(bytes(payload))
-                sums = arr.reshape(-1, 3).sum(axis=0, dtype="int64")
-                out.append((int(mid), w, h, int(sums[0]), int(sums[1]), int(sums[2])))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "sum_r", "sum_g", "sum_b"],
-            )
-
-    return media.mapInPandas(stats, _PPM_STATS_SCHEMA)
+def _ppm_stats(mid: int, payload: bytes) -> list:
+    """Decode a real PPM payload and report exact per-channel pixel sums."""
+    w, h, arr = decode_ppm(payload)
+    sums = arr.reshape(-1, 3).sum(axis=0, dtype="int64")
+    return [(mid, w, h, int(sums[0]), int(sums[1]), int(sums[2]))]
 
 
-def _q_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ppm_pixel_stats(_ppm_payloads(spark)).orderBy("media_id")
-
-
-register(
-    "multimodal_ppm_decode",
-    _q_ppm_decode,
-    oracle=f"""
+_PPM_ORACLE = f"""
     WITH dims AS (
       SELECT i, 16 + i % 5 AS w, 12 + i % 3 AS h
       FROM range({_N_PPM}) t(i)
@@ -570,8 +609,7 @@ register(
     FROM px
     GROUP BY i, w, h
     ORDER BY media_id
-    """,
-)
+    """
 
 
 # ------------------------------------------------------ REAL WAV codec
@@ -657,89 +695,46 @@ def decode_wav(payload: bytes):
     return rate, np.frombuffer(data, dtype="<i2")
 
 
-_WAV_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("sum_amp", T.LongType()),
-        T.StructField("sum_sq", T.LongType()),
-        T.StructField("rising_crossings", T.LongType()),
-    ]
+_WAV_SCHEMA = (
+    "media_id bigint, sample_rate int, n_samples bigint, sum_amp bigint,"
+    " sum_sq bigint, rising_crossings bigint"
 )
 
 _N_WAV = 16
 
 
-def _wav_payloads(spark: SparkSession, n: int = _N_WAV) -> DataFrame:
-    """n deterministic sawtooth clips as REAL WAV payloads; the sample
-    formula s_k = (k*step) % (2A) - A is shared with the oracle."""
+def _wav_payload(i: int) -> bytes:
+    """Sawtooth clip i as a REAL WAV payload; the sample formula
+    s_k = (k*step) % (2A) - A is shared with the oracle."""
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    n_samp = 64 + 16 * (i % 4)
+    step = 50 + 7 * i
+    amp = 1000 + 100 * (i % 7)
+    k = np.arange(n_samp, dtype="int64")
+    s = (k * step) % (2 * amp) - amp
+    return encode_wav(s.astype("int16"))
+
+
+def _pcm_stats(decode) -> Callable[[int, bytes], list]:
+    """Exact integer amplitude statistics of a ``decode(payload) ->
+    (rate, samples)`` audio format (the WAV stats shape)."""
+
+    def stats(mid: int, payload: bytes) -> list:
         import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                n_samp = 64 + 16 * (i % 4)
-                step = 50 + 7 * i
-                amp = 1000 + 100 * (i % 7)
-                k = np.arange(n_samp, dtype="int64")
-                s = (k * step) % (2 * amp) - amp
-                rows.append((i, encode_wav(s.astype("int16"))))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+        rate, s = decode(payload)
+        s64 = s.astype("int64")
+        rising = int(np.count_nonzero((s64[:-1] < 0) & (s64[1:] >= 0)))
+        return [
+            (mid, int(rate), len(s64), int(s64.sum()),
+             int((s64 * s64).sum()), rising)
+        ]
 
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
+    return stats
 
 
-def wav_stats(media: DataFrame) -> DataFrame:
-    """Decode real WAV payloads; exact integer amplitude statistics."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, s = decode_wav(bytes(payload))
-                s64 = s.astype("int64")
-                rising = int(
-                    np.count_nonzero((s64[:-1] < 0) & (s64[1:] >= 0))
-                )
-                out.append(
-                    (
-                        int(mid),
-                        int(rate),
-                        len(s64),
-                        int(s64.sum()),
-                        int((s64 * s64).sum()),
-                        rising,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id",
-                    "sample_rate",
-                    "n_samples",
-                    "sum_amp",
-                    "sum_sq",
-                    "rising_crossings",
-                ],
-            )
-
-    return media.mapInPandas(stats, _WAV_STATS_SCHEMA)
-
-
-def _q_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return wav_stats(_wav_payloads(spark)).orderBy("media_id")
-
-
-register(
-    "multimodal_wav_decode",
-    _q_wav_decode,
-    oracle=f"""
+_WAV_ORACLE = f"""
     WITH params AS (
       SELECT i, 64 + 16 * (i % 4) AS n_samp,
              50 + 7 * i AS step, 1000 + 100 * (i % 7) AS amp
@@ -762,8 +757,7 @@ register(
     FROM samp
     GROUP BY i
     ORDER BY media_id
-    """,
-)
+    """
 
 
 # ------------------------------------------------------ REAL BMP codec
@@ -845,81 +839,41 @@ def decode_bmp(payload: bytes):
     return width, height, rows[:, :, ::-1]  # BGR -> RGB
 
 
-_BMP_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-        T.StructField("ysum_r", T.LongType(), True),
-    ]
+_BMP_SCHEMA = (
+    "media_id bigint NOT NULL, width int, height int,"
+    " sum_r bigint, sum_g bigint, sum_b bigint, ysum_r bigint"
 )
 
 _N_BMP = 20
 
 
-def _bmp_payloads(spark: SparkSession, n: int = _N_BMP) -> DataFrame:
-    """n deterministic gradient images as REAL BMP payloads; widths
-    17..20 cycle all four row-padding residues."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                w, h = 17 + i % 4, 9 + i % 3
-                payload = encode_bmp(
-                    w,
-                    h,
-                    lambda x, y, i=i: (
-                        (x * 11 + y * 5 + i) % 256,
-                        (x * 3 + y * 13 + 2 * i) % 256,
-                        (x * 9 + y * 7 + 3 * i) % 256,
-                    ),
-                )
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
+def _bmp_payload(i: int) -> bytes:
+    """Gradient image i as a REAL BMP payload; widths 17..20 cycle all
+    four row-padding residues."""
+    return encode_bmp(
+        17 + i % 4,
+        9 + i % 3,
+        lambda x, y: (
+            (x * 11 + y * 5 + i) % 256,
+            (x * 3 + y * 13 + 2 * i) % 256,
+            (x * 9 + y * 7 + 3 * i) % 256,
+        ),
+    )
 
 
-def bmp_pixel_stats(media: DataFrame) -> DataFrame:
-    """Decode real BMP payloads; exact channel sums + a flip-sensitive
+def _bmp_stats(mid: int, payload: bytes) -> list:
+    """Decode a real BMP payload; exact channel sums + a flip-sensitive
     y-weighted red sum."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, arr = decode_bmp(bytes(payload))
-                sums = arr.reshape(-1, 3).sum(axis=0, dtype="int64")
-                ys = np.arange(h, dtype="int64")
-                ysum_r = int((arr[:, :, 0].sum(axis=1, dtype="int64") * ys).sum())
-                out.append(
-                    (int(mid), w, h, int(sums[0]), int(sums[1]), int(sums[2]), ysum_r)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height",
-                    "sum_r", "sum_g", "sum_b", "ysum_r",
-                ],
-            )
-
-    return media.mapInPandas(stats, _BMP_STATS_SCHEMA)
+    w, h, arr = decode_bmp(payload)
+    sums = arr.reshape(-1, 3).sum(axis=0, dtype="int64")
+    ys = np.arange(h, dtype="int64")
+    ysum_r = int((arr[:, :, 0].sum(axis=1, dtype="int64") * ys).sum())
+    return [(mid, w, h, int(sums[0]), int(sums[1]), int(sums[2]), ysum_r)]
 
 
-def _q_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bmp_pixel_stats(_bmp_payloads(spark)).orderBy("media_id")
-
-
-register(
-    "multimodal_bmp_decode",
-    _q_bmp_decode,
-    oracle=f"""
+_BMP_ORACLE = f"""
     WITH dims AS (
       SELECT i, 17 + i % 4 AS w, 9 + i % 3 AS h
       FROM range({_N_BMP}) t(i)
@@ -938,8 +892,7 @@ register(
     FROM px
     GROUP BY i, w, h
     ORDER BY media_id
-    """,
-)
+    """
 
 
 # ------------------------------------------------------ REAL PNG codec
@@ -1135,100 +1088,48 @@ def decode_png(payload: bytes):
     return width, height, img.astype(np.uint8)
 
 
-_PNG_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("channels", T.IntegerType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-        T.StructField("sum_a", T.LongType(), True),
-        T.StructField("ysum_g", T.LongType(), True),
-    ]
+_PNG_SCHEMA = (
+    "media_id bigint NOT NULL, width int, height int, channels int,"
+    " sum_r bigint, sum_g bigint, sum_b bigint, sum_a bigint, ysum_g bigint"
 )
 
 _N_PNG = 20
 
 
-def _png_payloads(spark: SparkSession, n: int = _N_PNG) -> DataFrame:
-    """n deterministic gradient images as REAL PNG payloads; heights
-    ≥7 so all five filter types occur in every image, alternating
-    RGB / RGBA by parity."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                w, h = 13 + i % 5, 7 + i % 4
-                alpha = i % 2 == 1
-                if alpha:
-                    payload = encode_png(
-                        w, h,
-                        lambda x, y, i=i: (
-                            (x * 7 + y * 3 + i) % 256,
-                            (x * 5 + y * 11 + 2 * i) % 256,
-                            (x * 13 + y * 2 + 3 * i) % 256,
-                            (x * 4 + y * 9 + 5 * i) % 256,
-                        ),
-                        alpha=True,
-                    )
-                else:
-                    payload = encode_png(
-                        w, h,
-                        lambda x, y, i=i: (
-                            (x * 7 + y * 3 + i) % 256,
-                            (x * 5 + y * 11 + 2 * i) % 256,
-                            (x * 13 + y * 2 + 3 * i) % 256,
-                        ),
-                    )
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
+def _png_payload(i: int) -> bytes:
+    """Gradient image i as a REAL PNG payload; heights >=7 so all five
+    filter types occur in every image, alternating RGB / RGBA by
+    parity."""
+    alpha = i % 2 == 1
+    return encode_png(
+        13 + i % 5, 7 + i % 4,
+        lambda x, y: (
+            (x * 7 + y * 3 + i) % 256,
+            (x * 5 + y * 11 + 2 * i) % 256,
+            (x * 13 + y * 2 + 3 * i) % 256,
+        ) + (((x * 4 + y * 9 + 5 * i) % 256,) if alpha else ()),
+        alpha=alpha,
+    )
 
 
-def png_pixel_stats(media: DataFrame) -> DataFrame:
-    """Decode real PNG payloads; exact channel sums (alpha NULL-free:
+def _png_stats(mid: int, payload: bytes) -> list:
+    """Decode a real PNG payload; exact channel sums (alpha NULL-free:
     255-filled for RGB inputs by the spec's opaque default) plus a
     flip-sensitive y-weighted green sum."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, arr = decode_png(bytes(payload))
-                ch = arr.shape[2]
-                sums = arr.reshape(-1, ch).sum(axis=0, dtype="int64")
-                sum_a = int(sums[3]) if ch == 4 else 255 * w * h
-                ys = np.arange(h, dtype="int64")
-                ysum_g = int((arr[:, :, 1].sum(axis=1, dtype="int64") * ys).sum())
-                out.append(
-                    (int(mid), w, h, ch,
-                     int(sums[0]), int(sums[1]), int(sums[2]), sum_a, ysum_g)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height", "channels",
-                    "sum_r", "sum_g", "sum_b", "sum_a", "ysum_g",
-                ],
-            )
-
-    return media.mapInPandas(stats, _PNG_STATS_SCHEMA)
+    w, h, arr = decode_png(payload)
+    ch = arr.shape[2]
+    sums = arr.reshape(-1, ch).sum(axis=0, dtype="int64")
+    sum_a = int(sums[3]) if ch == 4 else 255 * w * h
+    ys = np.arange(h, dtype="int64")
+    ysum_g = int((arr[:, :, 1].sum(axis=1, dtype="int64") * ys).sum())
+    return [
+        (mid, w, h, ch, int(sums[0]), int(sums[1]), int(sums[2]), sum_a, ysum_g)
+    ]
 
 
-def _q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return png_pixel_stats(_png_payloads(spark)).orderBy("media_id")
-
-
-register(
-    "multimodal_png_decode",
-    _q_png_decode,
-    oracle=f"""
+_PNG_ORACLE = f"""
     WITH dims AS (
       SELECT i, 13 + i % 5 AS w, 7 + i % 4 AS h, i % 2 AS has_a
       FROM range({_N_PNG}) t(i)
@@ -1251,8 +1152,7 @@ register(
     FROM px
     GROUP BY i, w, h, has_a
     ORDER BY media_id
-    """,
-)
+    """
 
 
 # ------------------------------------------------------ REAL Y4M codec
@@ -1398,93 +1298,53 @@ def y4m_sample_frames(payload: bytes, every: int = 1):
         yield f, yplane, uplane, vplane
 
 
-_Y4M_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), True),
-        T.StructField("ts_ms", T.IntegerType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("c420", T.IntegerType(), True),
-        T.StructField("ysum", T.LongType(), True),
-        T.StructField("usum", T.LongType(), True),
-        T.StructField("vsum", T.LongType(), True),
-        T.StructField("xwsum_y", T.LongType(), True),
-    ]
+_Y4M_SCHEMA = (
+    "media_id bigint NOT NULL, frame_idx int, ts_ms int, width int,"
+    " height int, c420 int, ysum bigint, usum bigint, vsum bigint,"
+    " xwsum_y bigint"
 )
 
 _N_Y4M = 12
 _Y4M_EVERY = 3
 
 
-def _y4m_payloads(spark: SparkSession, n: int = _N_Y4M) -> DataFrame:
-    """n deterministic videos as REAL Y4M payloads: dims/frame-count
-    vary, chroma alternates C444 / C420jpeg, F25:1 so ts = 40 ms per
-    frame.  The plane formulas are shared with the oracle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                w, h = 16 + 2 * (i % 3), 12 + 2 * ((i // 2) % 2)
-                nf = 9 + i % 4
-                payload = encode_y4m(
-                    w, h, nf,
-                    lambda f, x, y, i=i: (x * 3 + y * 5 + f * 7 + i) % 256,
-                    lambda f, x, y, i=i: (x * 2 + y * 9 + f * 4 + 2 * i) % 256,
-                    lambda f, x, y, i=i: (x * 11 + y * 6 + f * 3 + 5 * i) % 256,
-                    c420=i % 2 == 1,
-                )
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
+def _y4m_payload(i: int) -> bytes:
+    """Video i as a REAL Y4M payload: dims/frame-count vary, chroma
+    alternates C444 / C420jpeg, F25:1 so ts = 40 ms per frame.  The
+    plane formulas are shared with the oracle."""
+    return encode_y4m(
+        16 + 2 * (i % 3), 12 + 2 * ((i // 2) % 2), 9 + i % 4,
+        lambda f, x, y: (x * 3 + y * 5 + f * 7 + i) % 256,
+        lambda f, x, y: (x * 2 + y * 9 + f * 4 + 2 * i) % 256,
+        lambda f, x, y: (x * 11 + y * 6 + f * 3 + 5 * i) % 256,
+        c420=i % 2 == 1,
+    )
 
 
-def y4m_frame_stats(media: DataFrame, every: int = _Y4M_EVERY) -> DataFrame:
-    """Stride-seek every Nth frame of real Y4M payloads; exact integer
-    plane sums plus an x-weighted luma sum (catches plane transposition
-    that plain sums cannot)."""
+def _y4m_stats(mid: int, payload: bytes) -> list:
+    """Stride-seek every _Y4M_EVERY-th frame of a real Y4M payload;
+    exact integer plane sums plus an x-weighted luma sum (catches plane
+    transposition that plain sums cannot)."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload)
-                w, h, num, den, c420, _ = parse_y4m_header(payload)
-                for f, yp, up, vp in y4m_sample_frames(payload, every):
-                    y64 = yp.astype("int64")
-                    xw = np.arange(w, dtype="int64")
-                    out.append(
-                        (
-                            int(mid), f, f * 1000 * den // num, w, h, int(c420),
-                            int(y64.sum()),
-                            int(up.astype("int64").sum()),
-                            int(vp.astype("int64").sum()),
-                            int((y64.sum(axis=0) * xw).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "frame_idx", "ts_ms", "width", "height",
-                    "c420", "ysum", "usum", "vsum", "xwsum_y",
-                ],
+    w, h, num, den, c420, _ = parse_y4m_header(payload)
+    out = []
+    for f, yp, up, vp in y4m_sample_frames(payload, _Y4M_EVERY):
+        y64 = yp.astype("int64")
+        xw = np.arange(w, dtype="int64")
+        out.append(
+            (
+                mid, f, f * 1000 * den // num, w, h, int(c420),
+                int(y64.sum()),
+                int(up.astype("int64").sum()),
+                int(vp.astype("int64").sum()),
+                int((y64.sum(axis=0) * xw).sum()),
             )
-
-    return media.mapInPandas(stats, _Y4M_STATS_SCHEMA)
-
-
-def _q_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return y4m_frame_stats(_y4m_payloads(spark)).orderBy("media_id", "frame_idx")
+        )
+    return out
 
 
-register(
-    "multimodal_y4m_frames",
-    _q_y4m_frames,
-    oracle=f"""
+_Y4M_ORACLE = f"""
     WITH params AS (
       SELECT i, 16 + 2 * (i % 3) AS w, 12 + 2 * ((i // 2) % 2) AS h,
              9 + i % 4 AS nf, i % 2 AS c420
@@ -1530,8 +1390,7 @@ register(
     JOIN luma l ON l.i = fr.i AND l.f = fr.f
     JOIN chroma c ON c.i = fr.i AND c.f = fr.f
     ORDER BY media_id, frame_idx
-    """,
-)
+    """
 
 
 # ------------------------------------------------------ REAL GIF codec
@@ -1803,98 +1662,59 @@ def decode_gif(payload: bytes):
     return width, height, image
 
 
-_GIF_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_colors", T.IntegerType(), True),
-        T.StructField("interlaced", T.IntegerType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-        T.StructField("ysum_r", T.LongType(), True),
-    ]
+_GIF_SCHEMA = (
+    "media_id bigint NOT NULL, width int, height int, n_colors int,"
+    " interlaced int, sum_r bigint, sum_g bigint, sum_b bigint,"
+    " ysum_r bigint"
 )
 
 _N_GIF = 16
 
 
-def _gif_payloads(spark: SparkSession, n: int = _N_GIF) -> DataFrame:
-    """n deterministic palette-indexed images as REAL GIF payloads:
-    palette size cycles 4..256 colors (so the LZW min-code-size and
-    width schedule vary), interlace alternates, and the index/palette
-    formulas are shared with the oracle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                bits = 2 + i % 7
-                p = 1 << bits
-                payload = encode_gif(
-                    9 + 3 * (i % 5), 7 + 2 * (i % 4), bits,
-                    lambda x, y, i=i, p=p: (x * 3 + y * 5 + i) % p,
-                    lambda j, i=i: (
-                        (j * 7 + i) % 256,
-                        (j * 11 + 2 * i) % 256,
-                        (j * 13 + 3 * i) % 256,
-                    ),
-                    interlace=i % 2 == 1,
-                )
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
+def _gif_payload(i: int) -> bytes:
+    """Palette-indexed image i as a REAL GIF payload: palette size
+    cycles 4..256 colors (so the LZW min-code-size and width schedule
+    vary), interlace alternates, and the index/palette formulas are
+    shared with the oracle."""
+    bits = 2 + i % 7
+    p = 1 << bits
+    return encode_gif(
+        9 + 3 * (i % 5), 7 + 2 * (i % 4), bits,
+        lambda x, y: (x * 3 + y * 5 + i) % p,
+        lambda j: (
+            (j * 7 + i) % 256,
+            (j * 11 + 2 * i) % 256,
+            (j * 13 + 3 * i) % 256,
+        ),
+        interlace=i % 2 == 1,
+    )
 
 
-def gif_pixel_stats(media: DataFrame) -> DataFrame:
-    """Decode real GIF payloads; exact palette-mapped channel sums plus
+def _gif_stats(mid: int, payload: bytes) -> list:
+    """Decode a real GIF payload; exact palette-mapped channel sums plus
     a y-weighted red sum (de-interlace order sensitivity — plain sums
     are row-permutation-invariant, so a broken de-interlace would
     otherwise cancel)."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload)
-                # n_colors/interlaced come from the decoder's own block
-                # walk — offset arithmetic here would misread any legal
-                # GIF with an extension before the image descriptor.
-                w, h, arr, n_colors, interlaced = decode_gif_full(payload)
-                a64 = arr.astype("int64")
-                ys = np.arange(h, dtype="int64")
-                out.append(
-                    (
-                        int(mid), w, h, n_colors, interlaced,
-                        int(a64[:, :, 0].sum()),
-                        int(a64[:, :, 1].sum()),
-                        int(a64[:, :, 2].sum()),
-                        int((a64[:, :, 0].sum(axis=1) * ys).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height", "n_colors", "interlaced",
-                    "sum_r", "sum_g", "sum_b", "ysum_r",
-                ],
-            )
-
-    return media.mapInPandas(stats, _GIF_STATS_SCHEMA)
+    # n_colors/interlaced come from the decoder's own block walk —
+    # offset arithmetic here would misread any legal GIF with an
+    # extension before the image descriptor.
+    w, h, arr, n_colors, interlaced = decode_gif_full(payload)
+    a64 = arr.astype("int64")
+    ys = np.arange(h, dtype="int64")
+    return [
+        (
+            mid, w, h, n_colors, interlaced,
+            int(a64[:, :, 0].sum()),
+            int(a64[:, :, 1].sum()),
+            int(a64[:, :, 2].sum()),
+            int((a64[:, :, 0].sum(axis=1) * ys).sum()),
+        )
+    ]
 
 
-def _q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return gif_pixel_stats(_gif_payloads(spark)).orderBy("media_id")
-
-
-register(
-    "multimodal_gif_decode",
-    _q_gif_decode,
-    oracle=f"""
+_GIF_ORACLE = f"""
     WITH dims AS (
       SELECT i, 9 + 3 * (i % 5) AS w, 7 + 2 * (i % 4) AS h,
              CAST(power(2, 2 + i % 7) AS BIGINT) AS p, i % 2 AS il
@@ -1915,8 +1735,7 @@ register(
     FROM px
     GROUP BY i, w, h, p, il
     ORDER BY media_id
-    """,
-)
+    """
 
 
 # ------------------------------------------------------------------ JPEG
@@ -2511,19 +2330,10 @@ def decode_jpeg(payload: bytes):
     return w, h, np.clip(np.floor(rgb + 0.5), 0, 255).astype(np.uint8)
 
 
-_JPEG_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("subsampled", T.IntegerType(), True),
-        T.StructField("q_dc", T.IntegerType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-        T.StructField("ysum_g", T.LongType(), True),
-        T.StructField("xsum_b", T.LongType(), True),
-    ]
+_JPEG_SCHEMA = (
+    "media_id bigint NOT NULL, width int, height int, subsampled int,"
+    " q_dc int, sum_r bigint, sum_g bigint, sum_b bigint, ysum_g bigint,"
+    " xsum_b bigint"
 )
 
 _N_JPEG = 12
@@ -2539,36 +2349,26 @@ def _jpeg_params(i: int):
     }
 
 
-def _jpeg_payloads(spark: SparkSession, n: int = _N_JPEG) -> DataFrame:
-    """n deterministic block-constant YCbCr images as REAL baseline JPEG
-    payloads (see module note: block constancy + divisor-of-8 DC quant
-    steps make the lossy pipeline bit-exact, so the oracle can stay
-    closed-form).  Dims include non-multiples of 8/16 (MCU padding +
-    crop), subsampling alternates, quant DC steps cycle, and a third of
-    the streams carry restart markers."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                p = _jpeg_params(i)
-                payload = encode_jpeg(
-                    p["w"], p["h"],
-                    lambda x, y, i=i: ((x // 8) * 29 + (y // 8) * 17 + 16 * i) % 256,
-                    lambda x, y, i=i: ((x // 8) * 13 + (y // 8) * 31 + 8 * i) % 256,
-                    lambda x, y, i=i: ((x // 8) * 23 + (y // 8) * 11 + 24 * i) % 256,
-                    subsample=p["sub"], q_dc=p["q_dc"],
-                    restart_interval=p["ri"],
-                )
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
+def _jpeg_payload(i: int) -> bytes:
+    """Block-constant YCbCr image i as a REAL baseline JPEG payload (see
+    module note: block constancy + divisor-of-8 DC quant steps make the
+    lossy pipeline bit-exact, so the oracle can stay closed-form).  Dims
+    include non-multiples of 8/16 (MCU padding + crop), subsampling
+    alternates, quant DC steps cycle, and a third of the streams carry
+    restart markers."""
+    p = _jpeg_params(i)
+    return encode_jpeg(
+        p["w"], p["h"],
+        lambda x, y: ((x // 8) * 29 + (y // 8) * 17 + 16 * i) % 256,
+        lambda x, y: ((x // 8) * 13 + (y // 8) * 31 + 8 * i) % 256,
+        lambda x, y: ((x // 8) * 23 + (y // 8) * 11 + 24 * i) % 256,
+        subsample=p["sub"], q_dc=p["q_dc"],
+        restart_interval=p["ri"],
+    )
 
 
-def jpeg_pixel_stats(media: DataFrame, params_fn=None) -> DataFrame:
-    """Decode real JPEG payloads; exact RGB channel sums plus a
+def _jpeg_stats(mid: int, payload: bytes, params_fn=_jpeg_params) -> list:
+    """Decode a real JPEG payload; exact RGB channel sums plus a
     y-weighted green sum and x-weighted blue sum (flip/transpose
     anti-cancellation: plain sums are permutation-invariant, so a
     broken MCU raster order or swapped chroma planes would otherwise
@@ -2576,46 +2376,24 @@ def jpeg_pixel_stats(media: DataFrame, params_fn=None) -> DataFrame:
     (block-constant family by default; the AC family passes its own)."""
     import numpy as np
 
-    params_fn = params_fn or _jpeg_params
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = params_fn(int(mid))
-                w, h, arr = decode_jpeg(bytes(payload))
-                a64 = arr.astype("int64")
-                ys = np.arange(h, dtype="int64")
-                xs = np.arange(w, dtype="int64")
-                out.append(
-                    (
-                        int(mid), w, h, int(p["sub"]), p["q_dc"],
-                        int(a64[:, :, 0].sum()),
-                        int(a64[:, :, 1].sum()),
-                        int(a64[:, :, 2].sum()),
-                        int((a64[:, :, 1].sum(axis=1) * ys).sum()),
-                        int((a64[:, :, 2].sum(axis=0) * xs).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height", "subsampled", "q_dc",
-                    "sum_r", "sum_g", "sum_b", "ysum_g", "xsum_b",
-                ],
-            )
-
-    return media.mapInPandas(stats, _JPEG_STATS_SCHEMA)
+    p = params_fn(mid)
+    w, h, arr = decode_jpeg(payload)
+    a64 = arr.astype("int64")
+    ys = np.arange(h, dtype="int64")
+    xs = np.arange(w, dtype="int64")
+    return [
+        (
+            mid, w, h, int(p["sub"]), p["q_dc"],
+            int(a64[:, :, 0].sum()),
+            int(a64[:, :, 1].sum()),
+            int(a64[:, :, 2].sum()),
+            int((a64[:, :, 1].sum(axis=1) * ys).sum()),
+            int((a64[:, :, 2].sum(axis=0) * xs).sum()),
+        )
+    ]
 
 
-def _q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return jpeg_pixel_stats(_jpeg_payloads(spark)).orderBy("media_id")
-
-
-register(
-    "multimodal_jpeg_decode",
-    _q_jpeg_decode,
-    oracle=f"""
+_JPEG_ORACLE = f"""
     WITH dims AS (
       SELECT i, 24 + 4 * (i % 5) AS w, 16 + 4 * (i % 4) AS h,
              i % 2 AS sub, CAST(power(2, i % 4) AS BIGINT) AS q_dc
@@ -2655,8 +2433,7 @@ register(
     FROM rgb
     GROUP BY i, w, h, sub, q_dc
     ORDER BY media_id
-    """,
-)
+    """
 
 
 # ------------------------------------------------- REAL IMA-ADPCM codec
@@ -2893,75 +2670,43 @@ def _adpcm_signal(i: int, n: int):
     return out
 
 
-def _adpcm_payloads(spark: SparkSession, n: int = _N_ADPCM) -> DataFrame:
-    """n deterministic clips as REAL IMA-ADPCM WAV payloads."""
+def _adpcm_payload(i: int) -> bytes:
+    """Clip i as a REAL IMA-ADPCM WAV payload."""
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                n_samp, ba, rate = _ADPCM_PARAMS[i]
-                s = np.array(_adpcm_signal(i, n_samp), dtype=np.int16)
-                rows.append((i, encode_adpcm_wav(s, rate, block_align=ba)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
+    n_samp, ba, rate = _ADPCM_PARAMS[i]
+    s = np.array(_adpcm_signal(i, n_samp), dtype=np.int16)
+    return encode_adpcm_wav(s, rate, block_align=ba)
 
 
-_ADPCM_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("block_align", T.IntegerType(), True),
-        T.StructField("n_samples", T.LongType(), True),
-        T.StructField("sum_amp", T.LongType(), True),
-        T.StructField("sum_abs", T.LongType(), True),
-        T.StructField("ksum", T.LongType(), True),
-        T.StructField("last_sample", T.IntegerType(), True),
-    ]
+_ADPCM_SCHEMA = (
+    "media_id bigint NOT NULL, sample_rate int, block_align int,"
+    " n_samples bigint, sum_amp bigint, sum_abs bigint, ksum bigint,"
+    " last_sample int"
 )
 
 
-def adpcm_stats(media: DataFrame) -> DataFrame:
-    """Decode IMA-ADPCM payloads via the generic audio seam; exact
-    integer statistics.  ``ksum`` (position-weighted sum) is the
-    anti-symmetry guard: plain sums are permutation-invariant, so a
-    nibble-order or block-order bug could otherwise cancel."""
+def _sample_row(mid: int, rate: int, tag, s) -> tuple:
+    """(media_id, rate, tag, n, sum, sum|s|, k-weighted sum, last
+    sample): ``ksum`` (position-weighted sum) is the anti-symmetry
+    guard — plain sums are permutation-invariant, so a nibble-order or
+    block-order bug could otherwise cancel."""
+    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                i = int(mid)
-                rate, s = decode_audio(bytes(payload))
-                _, ba, _ = _ADPCM_PARAMS[i]
-                s64 = s.astype(np.int64)
-                k = np.arange(len(s64), dtype=np.int64)
-                out.append(
-                    (
-                        i, int(rate), ba, len(s64), int(s64.sum()),
-                        int(np.abs(s64).sum()), int((k * s64).sum()),
-                        int(s64[-1]) if len(s64) else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "sample_rate", "block_align", "n_samples",
-                    "sum_amp", "sum_abs", "ksum", "last_sample",
-                ],
-            )
-
-    return media.mapInPandas(stats, _ADPCM_STATS_SCHEMA)
+    s64 = s.astype(np.int64)
+    k = np.arange(len(s64), dtype=np.int64)
+    return (
+        mid, int(rate), tag, len(s64), int(s64.sum()),
+        int(np.abs(s64).sum()), int((k * s64).sum()),
+        int(s64[-1]) if len(s64) else 0,
+    )
 
 
-def _q_adpcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return adpcm_stats(_adpcm_payloads(spark)).orderBy("media_id")
+def _adpcm_stats(mid: int, payload: bytes) -> list:
+    """Decode an IMA-ADPCM payload via the generic audio seam; exact
+    integer statistics."""
+    rate, s = decode_audio(payload)
+    return [_sample_row(mid, rate, _ADPCM_PARAMS[mid][1], s)]
 
 
 # Pinned per-clip statistics — generated ONCE by the independent scalar
@@ -2984,22 +2729,8 @@ _ADPCM_EXPECTED = [
     (11, 16000, 24, 160, 188297, 1364337, 22341401, 11067),
 ]
 
-_ADPCM_ORACLE = "SELECT " + ", ".join(
-    [
-        "CAST(col0 AS BIGINT) AS media_id",
-        "CAST(col1 AS INT) AS sample_rate",
-        "CAST(col2 AS INT) AS block_align",
-        "CAST(col3 AS BIGINT) AS n_samples",
-        "CAST(col4 AS BIGINT) AS sum_amp",
-        "CAST(col5 AS BIGINT) AS sum_abs",
-        "CAST(col6 AS BIGINT) AS ksum",
-        "CAST(col7 AS INT) AS last_sample",
-    ]
-) + " FROM (VALUES " + ", ".join(
-    str(r) for r in _ADPCM_EXPECTED
-) + ") ORDER BY media_id"
+_ADPCM_ORACLE = _pinned_oracle(_ADPCM_SCHEMA, _ADPCM_EXPECTED)
 
-register("multimodal_adpcm_decode", _q_adpcm_decode, oracle=_ADPCM_ORACLE)
 
 
 
@@ -3082,31 +2813,20 @@ def _jpeg_ac_plane_fn(i: int, plane: str):
     return fn
 
 
-def _jpeg_ac_payloads(spark: SparkSession, n: int = _N_JPEG_AC) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                p = _jpeg_ac_params(i)
-                payload = encode_jpeg(
-                    p["w"], p["h"],
-                    _jpeg_ac_plane_fn(i, "y"),
-                    _jpeg_ac_plane_fn(i, "cb"),
-                    _jpeg_ac_plane_fn(i, "cr"),
-                    subsample=p["sub"], q_dc=p["q_dc"],
-                    restart_interval=p["ri"],
-                )
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
+def _jpeg_ac_payload(i: int) -> bytes:
+    p = _jpeg_ac_params(i)
+    return encode_jpeg(
+        p["w"], p["h"],
+        _jpeg_ac_plane_fn(i, "y"),
+        _jpeg_ac_plane_fn(i, "cb"),
+        _jpeg_ac_plane_fn(i, "cr"),
+        subsample=p["sub"], q_dc=p["q_dc"],
+        restart_interval=p["ri"],
+    )
 
 
-def _q_jpeg_ac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return jpeg_pixel_stats(
-        _jpeg_ac_payloads(spark), params_fn=_jpeg_ac_params
-    ).orderBy("media_id")
+def _jpeg_ac_stats(mid: int, payload: bytes) -> list:
+    return _jpeg_stats(mid, payload, _jpeg_ac_params)
 
 
 # Pinned stats — generated ONCE by the independent explicit-loop
@@ -3127,25 +2847,8 @@ _JPEG_AC_EXPECTED = [
     (9, 48, 16, 1, 1, 98712, 95412, 78164, 710538, 1820356),
 ]
 
-_JPEG_AC_ORACLE = "SELECT " + ", ".join(
-    [
-        "CAST(col0 AS BIGINT) AS media_id",
-        "CAST(col1 AS INT) AS width",
-        "CAST(col2 AS INT) AS height",
-        "CAST(col3 AS INT) AS subsampled",
-        "CAST(col4 AS INT) AS q_dc",
-        "CAST(col5 AS BIGINT) AS sum_r",
-        "CAST(col6 AS BIGINT) AS sum_g",
-        "CAST(col7 AS BIGINT) AS sum_b",
-        "CAST(col8 AS BIGINT) AS ysum_g",
-        "CAST(col9 AS BIGINT) AS xsum_b",
-    ]
-) + " FROM (VALUES " + ", ".join(
-    str(r) for r in _JPEG_AC_EXPECTED
-) + ") ORDER BY media_id"
+_JPEG_AC_ORACLE = _pinned_oracle(_JPEG_SCHEMA, _JPEG_AC_EXPECTED)
 
-register("multimodal_jpeg_ac_decode", _q_jpeg_ac_decode,
-         oracle=_JPEG_AC_ORACLE)
 
 
 
@@ -3337,72 +3040,26 @@ def _g711_signal(i: int, n: int):
     return out
 
 
-def _g711_payloads(spark: SparkSession, n: int = _N_G711) -> DataFrame:
-    """n deterministic clips as REAL G.711 WAV payloads."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                n_samp, rate, law = _G711_PARAMS[i]
-                rows.append(
-                    (i, encode_g711_wav(_g711_signal(i, n_samp), rate, law))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
+def _g711_payload(i: int) -> bytes:
+    """Clip i as a REAL G.711 WAV payload."""
+    n_samp, rate, law = _G711_PARAMS[i]
+    return encode_g711_wav(_g711_signal(i, n_samp), rate, law)
 
 
-_G711_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("codec", T.StringType(), True),
-        T.StructField("n_samples", T.LongType(), True),
-        T.StructField("sum_amp", T.LongType(), True),
-        T.StructField("sum_abs", T.LongType(), True),
-        T.StructField("ksum", T.LongType(), True),
-        T.StructField("last_sample", T.IntegerType(), True),
-    ]
+_G711_SCHEMA = (
+    "media_id bigint NOT NULL, sample_rate int, codec string,"
+    " n_samples bigint, sum_amp bigint, sum_abs bigint, ksum bigint,"
+    " last_sample int"
 )
 
 
-def g711_stats(media: DataFrame) -> DataFrame:
-    """Decode G.711 payloads via the generic audio seam; exact integer
-    statistics.  ``ksum`` (position-weighted) again guards sample order;
-    ``sum_abs`` separates the two laws (their quantization grids differ,
-    so a law-dispatch bug cannot produce matching magnitudes)."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, law, s = decode_g711_wav(bytes(payload))
-                s64 = s.astype(np.int64)
-                k = np.arange(len(s64), dtype=np.int64)
-                out.append(
-                    (
-                        int(mid), int(rate), law, len(s64), int(s64.sum()),
-                        int(np.abs(s64).sum()), int((k * s64).sum()),
-                        int(s64[-1]) if len(s64) else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "sample_rate", "codec", "n_samples",
-                    "sum_amp", "sum_abs", "ksum", "last_sample",
-                ],
-            )
-
-    return media.mapInPandas(stats, _G711_STATS_SCHEMA)
-
-
-def _q_g711_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return g711_stats(_g711_payloads(spark)).orderBy("media_id")
+def _g711_stats(mid: int, payload: bytes) -> list:
+    """Decode a G.711 payload; exact integer statistics.  ``ksum``
+    (position-weighted) again guards sample order; ``sum_abs`` separates
+    the two laws (their quantization grids differ, so a law-dispatch bug
+    cannot produce matching magnitudes)."""
+    rate, law, s = decode_g711_wav(payload)
+    return [_sample_row(mid, rate, law, s)]
 
 
 # Pinned per-clip statistics — generated ONCE by the independent
@@ -3426,22 +3083,8 @@ _G711_EXPECTED = [
     (11, 8000, "alaw", 63, 144456, 1190008, 6923712, 16128),
 ]
 
-_G711_ORACLE = "SELECT " + ", ".join(
-    [
-        "CAST(col0 AS BIGINT) AS media_id",
-        "CAST(col1 AS INT) AS sample_rate",
-        "col2 AS codec",
-        "CAST(col3 AS BIGINT) AS n_samples",
-        "CAST(col4 AS BIGINT) AS sum_amp",
-        "CAST(col5 AS BIGINT) AS sum_abs",
-        "CAST(col6 AS BIGINT) AS ksum",
-        "CAST(col7 AS INT) AS last_sample",
-    ]
-) + " FROM (VALUES " + ", ".join(
-    str(r) for r in _G711_EXPECTED
-) + ") ORDER BY media_id"
+_G711_ORACLE = _pinned_oracle(_G711_SCHEMA, _G711_EXPECTED)
 
-register("multimodal_g711_decode", _q_g711_decode, oracle=_G711_ORACLE)
 
 
 # --------------------------------------------------- Y4M scene-cut detection
@@ -3457,7 +3100,13 @@ register("multimodal_g711_decode", _q_g711_decode, oracle=_G711_ORACLE)
 SCENE_CUT_MAD = 32
 
 
-def scene_cut_stats(media: DataFrame, thr: int = SCENE_CUT_MAD) -> DataFrame:
+_SCENE_SCHEMA = (
+    "media_id bigint NOT NULL, width int, height int, n_frames int,"
+    " n_cuts int, first_cut int, sad_sum bigint, sad_max bigint"
+)
+
+
+def _scene_stats(mid: int, payload: bytes) -> list:
     """Per-clip scene-cut statistics from consecutive-frame luma SAD.
 
     Decodes through the real Y4M path (``y4m_sample_frames`` with
@@ -3466,57 +3115,28 @@ def scene_cut_stats(media: DataFrame, thr: int = SCENE_CUT_MAD) -> DataFrame:
     clip inside the Arrow batch; per-clip state never leaves the
     executor, so the operator partitions by clip like every codec here.
     """
+    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload)
-                w, h, _n, _d, _c420, _hdr = parse_y4m_header(payload)
-                npix = w * h
-                prev = None
-                n_frames = n_cuts = 0
-                first_cut = -1
-                sad_sum = sad_max = 0
-                for _f, yp, _up, _vp in y4m_sample_frames(payload, 1):
-                    n_frames += 1
-                    y64 = yp.astype(np.int64)
-                    if prev is not None:
-                        sad = int(np.abs(y64 - prev).sum())
-                        sad_sum += sad
-                        sad_max = max(sad_max, sad)
-                        if sad > thr * npix:
-                            n_cuts += 1
-                            if first_cut < 0:
-                                first_cut = n_frames - 1
-                    prev = y64
-                out.append(
-                    (int(mid), w, h, n_frames, n_cuts, first_cut,
-                     sad_sum, sad_max)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height", "n_frames", "n_cuts",
-                    "first_cut", "sad_sum", "sad_max",
-                ],
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("width", T.IntegerType(), True),
-            T.StructField("height", T.IntegerType(), True),
-            T.StructField("n_frames", T.IntegerType(), True),
-            T.StructField("n_cuts", T.IntegerType(), True),
-            T.StructField("first_cut", T.IntegerType(), True),
-            T.StructField("sad_sum", T.LongType(), True),
-            T.StructField("sad_max", T.LongType(), True),
-        ]
-    )
-    return media.mapInPandas(stats, schema)
+    thr = SCENE_CUT_MAD
+    w, h, _n, _d, _c420, _hdr = parse_y4m_header(payload)
+    npix = w * h
+    prev = None
+    n_frames = n_cuts = 0
+    first_cut = -1
+    sad_sum = sad_max = 0
+    for _f, yp, _up, _vp in y4m_sample_frames(payload, 1):
+        n_frames += 1
+        y64 = yp.astype(np.int64)
+        if prev is not None:
+            sad = int(np.abs(y64 - prev).sum())
+            sad_sum += sad
+            sad_max = max(sad_max, sad)
+            if sad > thr * npix:
+                n_cuts += 1
+                if first_cut < 0:
+                    first_cut = n_frames - 1
+        prev = y64
+    return [(mid, w, h, n_frames, n_cuts, first_cut, sad_sum, sad_max)]
 
 
 _N_SCENE = 10
@@ -3543,31 +3163,16 @@ def _scene_y(i: int, f: int, x: int, y: int) -> int:
     return base + ((x * 3 + y * 5 + f * 2 + i) % 64)
 
 
-def _scene_payloads(spark: SparkSession, n: int = _N_SCENE) -> DataFrame:
-    """n deterministic multi-scene videos as REAL Y4M payloads."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                nf, _seg, c420 = _SCENE_PARAMS[i]
-                w, h = 16 + 2 * (i % 3), 12 + 2 * ((i // 3) % 2)
-                payload = encode_y4m(
-                    w, h, nf,
-                    lambda f, x, y, i=i: _scene_y(i, f, x, y),
-                    lambda f, x, y, i=i: (x + 2 * y + 3 * i) % 256,
-                    lambda f, x, y, i=i: (2 * x + y + 5 * i) % 256,
-                    c420=c420,
-                )
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
-
-
-def _q_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return scene_cut_stats(_scene_payloads(spark)).orderBy("media_id")
+def _scene_payload(i: int) -> bytes:
+    """Multi-scene video i as a REAL Y4M payload."""
+    nf, _seg, c420 = _SCENE_PARAMS[i]
+    return encode_y4m(
+        16 + 2 * (i % 3), 12 + 2 * ((i // 3) % 2), nf,
+        lambda f, x, y: _scene_y(i, f, x, y),
+        lambda f, x, y: (x + 2 * y + 3 * i) % 256,
+        lambda f, x, y: (2 * x + y + 5 * i) % 256,
+        c420=c420,
+    )
 
 
 # Pinned per-clip statistics — generated ONCE by the independent
@@ -3589,22 +3194,8 @@ _SCENE_EXPECTED = [
     (9, 16, 14, 1, 0, -1, 0, 0),
 ]
 
-_SCENE_ORACLE = "SELECT " + ", ".join(
-    [
-        "CAST(col0 AS BIGINT) AS media_id",
-        "CAST(col1 AS INT) AS width",
-        "CAST(col2 AS INT) AS height",
-        "CAST(col3 AS INT) AS n_frames",
-        "CAST(col4 AS INT) AS n_cuts",
-        "CAST(col5 AS INT) AS first_cut",
-        "CAST(col6 AS BIGINT) AS sad_sum",
-        "CAST(col7 AS BIGINT) AS sad_max",
-    ]
-) + " FROM (VALUES " + ", ".join(
-    str(r) for r in _SCENE_EXPECTED
-) + ") ORDER BY media_id"
+_SCENE_ORACLE = _pinned_oracle(_SCENE_SCHEMA, _SCENE_EXPECTED)
 
-register("multimodal_scene_cut", _q_scene_cut, oracle=_SCENE_ORACLE)
 
 
 # ------------------------------------------------ audio energy / VAD windows
@@ -3621,62 +3212,40 @@ AUDIO_WIN = 160
 AUDIO_SILENCE_MSQ = 10_000  # mean-square threshold per sample
 
 
-def audio_energy_stats(
-    media: DataFrame, win: int = AUDIO_WIN, thr: int = AUDIO_SILENCE_MSQ
-) -> DataFrame:
-    """Per-clip VAD-style statistics from fixed windows of the decoded
-    PCM stream (trailing partial window dropped — windows are
-    fixed-duration by construction).  Zero crossings count strict sign
-    products v[k]*v[k+1] < 0 WITHIN each window (zeros break runs
+_AUDIO_E_SCHEMA = (
+    "media_id bigint NOT NULL, sample_rate int, n_samples bigint,"
+    " n_windows int, n_silent int, energy_sum bigint, energy_max bigint,"
+    " zc_sum bigint, first_active int"
+)
+
+
+def _audio_e_stats(mid: int, payload: bytes) -> list:
+    """Per-clip VAD-style statistics from fixed AUDIO_WIN-sample windows
+    of the decoded PCM stream (trailing partial window dropped — windows
+    are fixed-duration by construction).  Zero crossings count strict
+    sign products v[k]*v[k+1] < 0 WITHIN each window (zeros break runs
     without counting).  Integer bounds: per-window energy <= win *
     32768^2 ~ 1.7e11; the per-clip sum stays BIGINT-safe through ~5e7
     windows per clip (hours of audio)."""
+    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, s = decode_audio(bytes(payload))
-                s64 = s.astype(np.int64)
-                nw = len(s64) // win
-                w64 = s64[: nw * win].reshape(nw, win)
-                energy = (w64 * w64).sum(axis=1)
-                zc = ((w64[:, :-1] * w64[:, 1:]) < 0).sum(axis=1)
-                silent = energy < thr * win
-                active = np.nonzero(~silent)[0]
-                out.append(
-                    (
-                        int(mid), int(rate), len(s64), nw,
-                        int(silent.sum()), int(energy.sum()),
-                        int(energy.max()) if nw else 0, int(zc.sum()),
-                        int(active[0]) if len(active) else -1,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "sample_rate", "n_samples", "n_windows",
-                    "n_silent", "energy_sum", "energy_max", "zc_sum",
-                    "first_active",
-                ],
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("sample_rate", T.IntegerType(), True),
-            T.StructField("n_samples", T.LongType(), True),
-            T.StructField("n_windows", T.IntegerType(), True),
-            T.StructField("n_silent", T.IntegerType(), True),
-            T.StructField("energy_sum", T.LongType(), True),
-            T.StructField("energy_max", T.LongType(), True),
-            T.StructField("zc_sum", T.LongType(), True),
-            T.StructField("first_active", T.IntegerType(), True),
-        ]
-    )
-    return media.mapInPandas(stats, schema)
+    win, thr = AUDIO_WIN, AUDIO_SILENCE_MSQ
+    rate, s = decode_audio(payload)
+    s64 = s.astype(np.int64)
+    nw = len(s64) // win
+    w64 = s64[: nw * win].reshape(nw, win)
+    energy = (w64 * w64).sum(axis=1)
+    zc = ((w64[:, :-1] * w64[:, 1:]) < 0).sum(axis=1)
+    silent = energy < thr * win
+    active = np.nonzero(~silent)[0]
+    return [
+        (
+            mid, int(rate), len(s64), nw,
+            int(silent.sum()), int(energy.sum()),
+            int(energy.max()) if nw else 0, int(zc.sum()),
+            int(active[0]) if len(active) else -1,
+        )
+    ]
 
 
 _N_AUDIO_E = 10
@@ -3711,26 +3280,12 @@ def _audio_e_signal(i: int, n: int, layout: str):
     return out
 
 
-def _audio_e_payloads(spark: SparkSession, n: int = _N_AUDIO_E) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+def _audio_e_payload(i: int) -> bytes:
+    import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                n_samp, rate, layout = _AUDIO_E_PARAMS[i]
-                s = np.array(
-                    _audio_e_signal(i, n_samp, layout), dtype=np.int16
-                )
-                rows.append((i, encode_wav(s, rate)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
-
-
-def _q_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return audio_energy_stats(_audio_e_payloads(spark)).orderBy("media_id")
+    n_samp, rate, layout = _AUDIO_E_PARAMS[i]
+    s = np.array(_audio_e_signal(i, n_samp, layout), dtype=np.int16)
+    return encode_wav(s, rate)
 
 
 # Pinned per-clip statistics — generated ONCE by the independent scalar
@@ -3751,23 +3306,8 @@ _AUDIO_E_EXPECTED = [
     (9, 16000, 2400, 15, 5, 333644744563, 49625474720, 1094, 5),
 ]
 
-_AUDIO_E_ORACLE = "SELECT " + ", ".join(
-    [
-        "CAST(col0 AS BIGINT) AS media_id",
-        "CAST(col1 AS INT) AS sample_rate",
-        "CAST(col2 AS BIGINT) AS n_samples",
-        "CAST(col3 AS INT) AS n_windows",
-        "CAST(col4 AS INT) AS n_silent",
-        "CAST(col5 AS BIGINT) AS energy_sum",
-        "CAST(col6 AS BIGINT) AS energy_max",
-        "CAST(col7 AS BIGINT) AS zc_sum",
-        "CAST(col8 AS INT) AS first_active",
-    ]
-) + " FROM (VALUES " + ", ".join(
-    str(r) for r in _AUDIO_E_EXPECTED
-) + ") ORDER BY media_id"
+_AUDIO_E_ORACLE = _pinned_oracle(_AUDIO_E_SCHEMA, _AUDIO_E_EXPECTED)
 
-register("multimodal_audio_energy", _q_audio_energy, oracle=_AUDIO_E_ORACLE)
 
 
 # ------------------------------------------------------- baseline TIFF codec
@@ -3981,79 +3521,44 @@ def _tiff_pixel(i: int, x: int, y: int, c: int) -> int:
     return (x * 3 + y * 5 + c * 7 + 11 * i) % 256
 
 
-def _tiff_payloads(spark: SparkSession, n: int = _N_TIFF) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+def _tiff_payload(i: int) -> bytes:
+    import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                w, h, pb, rps = _TIFF_PARAMS[i]
-                img = np.empty((h, w, 3), dtype=np.uint8)
-                for y in range(h):
-                    for x in range(w):
-                        for c in range(3):
-                            img[y, x, c] = _tiff_pixel(i, x, y, c)
-                rows.append((i, encode_tiff(img, packbits=pb, rows_per_strip=rps)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
+    w, h, pb, rps = _TIFF_PARAMS[i]
+    img = np.empty((h, w, 3), dtype=np.uint8)
+    for y in range(h):
+        for x in range(w):
+            for c in range(3):
+                img[y, x, c] = _tiff_pixel(i, x, y, c)
+    return encode_tiff(img, packbits=pb, rows_per_strip=rps)
 
 
-_TIFF_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("compressed", T.IntegerType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-        T.StructField("ysum_g", T.LongType(), True),
-        T.StructField("xsum_b", T.LongType(), True),
-    ]
+_TIFF_SCHEMA = (
+    "media_id bigint NOT NULL, width int, height int, compressed int,"
+    " sum_r bigint, sum_g bigint, sum_b bigint, ysum_g bigint, xsum_b bigint"
 )
 
 
-def tiff_pixel_stats(media: DataFrame) -> DataFrame:
-    """Decode TIFF payloads via the generic image seam; exact integer
+def _tiff_stats(mid: int, payload: bytes) -> list:
+    """Decode a TIFF payload via the generic image seam; exact integer
     channel sums plus y-weighted green / x-weighted blue (the
     established anti-cancellation pair: plain sums are invariant under
     raster order and strip permutation, the weighted sums are not)."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                i = int(mid)
-                w, h, rgb = decode_image(bytes(payload))
-                a = rgb.astype(np.int64)
-                yw = np.arange(h, dtype=np.int64)[:, None]
-                xw = np.arange(w, dtype=np.int64)[None, :]
-                out.append(
-                    (
-                        i, w, h, int(_TIFF_PARAMS[i][2]),
-                        int(a[:, :, 0].sum()), int(a[:, :, 1].sum()),
-                        int(a[:, :, 2].sum()),
-                        int((a[:, :, 1] * yw).sum()),
-                        int((a[:, :, 2] * xw).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height", "compressed",
-                    "sum_r", "sum_g", "sum_b", "ysum_g", "xsum_b",
-                ],
-            )
-
-    return media.mapInPandas(stats, _TIFF_STATS_SCHEMA)
-
-
-def _q_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tiff_pixel_stats(_tiff_payloads(spark)).orderBy("media_id")
+    w, h, rgb = decode_image(payload)
+    a = rgb.astype(np.int64)
+    yw = np.arange(h, dtype=np.int64)[:, None]
+    xw = np.arange(w, dtype=np.int64)[None, :]
+    return [
+        (
+            mid, w, h, int(_TIFF_PARAMS[mid][2]),
+            int(a[:, :, 0].sum()), int(a[:, :, 1].sum()),
+            int(a[:, :, 2].sum()),
+            int((a[:, :, 1] * yw).sum()),
+            int((a[:, :, 2] * xw).sum()),
+        )
+    ]
 
 
 # Closed-form oracle: the pixel formula is shared with the oracle SQL
@@ -4095,7 +3600,6 @@ def _tiff_oracle() -> str:
     """
 
 
-register("multimodal_tiff_decode", _q_tiff_decode, oracle=_tiff_oracle())
 
 
 # ---------------------------------------------------------------- QOI codec
@@ -4295,93 +3799,62 @@ def _qoi_pixel(i: int, x: int, y: int, c: int) -> int:
     return (8 * x + 20 * c + 11 * i) % 256
 
 
-def _qoi_payloads(spark: SparkSession, n: int = _N_QOI) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+def _qoi_payload(i: int) -> bytes:
+    import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                w, h, ch = _QOI_PARAMS[i]
-                yy, xx = np.mgrid[0:h, 0:w]
-                band = (4 * xx) // w
-                img = np.empty((h, w, ch), dtype=np.uint8)
-                for c in range(min(ch, 3)):
-                    v = np.select(
-                        [band == 0, band == 1, band == 2],
-                        [
-                            np.full((h, w), (37 * i + 3 * c) % 256),
-                            (xx % 2) * 60 + 10 * c + 7 * i,
-                            xx + yy + 30 * c + 5 * i,
-                        ],
-                        default=8 * xx + 20 * c + 11 * i,
-                    )
-                    img[:, :, c] = (v % 256).astype(np.uint8)
-                if ch == 4:
-                    img[:, :, 3] = ((yy * 16 + 13 * i) % 256).astype(np.uint8)
-                rows.append((i, encode_qoi(img)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
+    w, h, ch = _QOI_PARAMS[i]
+    yy, xx = np.mgrid[0:h, 0:w]
+    band = (4 * xx) // w
+    img = np.empty((h, w, ch), dtype=np.uint8)
+    for c in range(min(ch, 3)):
+        v = np.select(
+            [band == 0, band == 1, band == 2],
+            [
+                np.full((h, w), (37 * i + 3 * c) % 256),
+                (xx % 2) * 60 + 10 * c + 7 * i,
+                xx + yy + 30 * c + 5 * i,
+            ],
+            default=8 * xx + 20 * c + 11 * i,
+        )
+        img[:, :, c] = (v % 256).astype(np.uint8)
+    if ch == 4:
+        img[:, :, 3] = ((yy * 16 + 13 * i) % 256).astype(np.uint8)
+    return encode_qoi(img)
 
 
-_QOI_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("channels", T.IntegerType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-        T.StructField("sum_a", T.LongType(), True),
-        T.StructField("ysum_g", T.LongType(), True),
-        T.StructField("xsum_b", T.LongType(), True),
-    ]
+_RGBA_SCHEMA = (
+    "media_id bigint NOT NULL, width int, height int, channels int,"
+    " sum_r bigint, sum_g bigint, sum_b bigint, sum_a bigint,"
+    " ysum_g bigint, xsum_b bigint"
 )
 
 
-def qoi_pixel_stats(media: DataFrame) -> DataFrame:
-    """Decode QOI payloads (decode_qoi — alpha-aware, unlike the
-    3-channel image seam); exact integer channel sums plus the
-    y-weighted green / x-weighted blue anti-cancellation pair.  For
-    3-channel images sum_a is the implicit opaque 255 * w * h."""
-    import numpy as np
+def _rgba_stats(decode) -> Callable[[int, bytes], list]:
+    """Row function for a ``decode(payload) -> (w, h, channels, arr)``
+    image format: exact integer channel sums plus the y-weighted green
+    / x-weighted blue anti-cancellation pair (a row-order, plane or
+    channel-order bug flips them loudly).  For 3-channel images sum_a
+    is the implicit opaque 255 * w * h."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, ch, arr = decode_qoi(bytes(payload))
-                a = arr.astype(np.int64)
-                yw = np.arange(h, dtype=np.int64)[:, None]
-                xw = np.arange(w, dtype=np.int64)[None, :]
-                sum_a = (
-                    int(a[:, :, 3].sum()) if ch == 4 else 255 * w * h
-                )
-                out.append(
-                    (
-                        int(mid), w, h, ch,
-                        int(a[:, :, 0].sum()), int(a[:, :, 1].sum()),
-                        int(a[:, :, 2].sum()), sum_a,
-                        int((a[:, :, 1] * yw).sum()),
-                        int((a[:, :, 2] * xw).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height", "channels",
-                    "sum_r", "sum_g", "sum_b", "sum_a", "ysum_g", "xsum_b",
-                ],
+    def stats(mid: int, payload: bytes) -> list:
+        import numpy as np
+
+        w, h, ch, arr = decode(payload)
+        a = arr.astype(np.int64)
+        yw = np.arange(h, dtype=np.int64)[:, None]
+        xw = np.arange(w, dtype=np.int64)[None, :]
+        sum_a = int(a[:, :, 3].sum()) if ch == 4 else 255 * w * h
+        return [
+            (
+                mid, w, h, ch,
+                int(a[:, :, 0].sum()), int(a[:, :, 1].sum()),
+                int(a[:, :, 2].sum()), sum_a,
+                int((a[:, :, 1] * yw).sum()),
+                int((a[:, :, 2] * xw).sum()),
             )
+        ]
 
-    return media.mapInPandas(stats, _QOI_STATS_SCHEMA)
-
-
-def _q_qoi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return qoi_pixel_stats(_qoi_payloads(spark)).orderBy("media_id")
+    return stats
 
 
 def _qoi_oracle() -> str:
@@ -4427,7 +3900,6 @@ def _qoi_oracle() -> str:
     """
 
 
-register("multimodal_qoi_decode", _q_qoi_decode, oracle=_qoi_oracle())
 
 
 # --------------------------------------------------------------- EXIF parse
@@ -4590,78 +4062,36 @@ def _exif_meta(i: int) -> dict:
     }
 
 
-def _exif_payloads(spark: SparkSession, n: int = _N_JPEG) -> DataFrame:
-    """The block-constant JPEG fixture family with a REAL APP1 Exif
-    segment spliced in after SOI — pixel dimensions in the Exif sub-IFD
-    are set to the true image dims, so the graded row cross-checks the
-    metadata against the image geometry."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                p = _jpeg_params(i)
-                payload = encode_jpeg(
-                    p["w"], p["h"],
-                    lambda x, y, i=i: ((x // 8) * 29 + (y // 8) * 17 + 16 * i) % 256,
-                    lambda x, y, i=i: ((x // 8) * 13 + (y // 8) * 31 + 8 * i) % 256,
-                    lambda x, y, i=i: ((x // 8) * 23 + (y // 8) * 11 + 24 * i) % 256,
-                    subsample=p["sub"], q_dc=p["q_dc"],
-                    restart_interval=p["ri"],
-                )
-                m = _exif_meta(i)
-                app1 = build_exif_app1(
-                    m["make"], m["datetime"], m["orientation"],
-                    p["w"], p["h"], m["iso"],
-                )
-                rows.append((i, payload[:2] + app1 + payload[2:]))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
-
-
-def exif_stats(media: DataFrame) -> DataFrame:
-    """Parse EXIF from each payload; year/month split out of the EXIF
-    datetime string so the graded columns are integers + short strings."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                x = parse_exif(bytes(payload))
-                out.append(
-                    (
-                        int(mid), x["make"], x["orientation"],
-                        x["pixel_w"], x["pixel_h"], x["iso"],
-                        int(x["datetime"][0:4]), int(x["datetime"][5:7]),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "make", "orientation", "pixel_w",
-                    "pixel_h", "iso", "year", "month",
-                ],
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("make", T.StringType(), True),
-            T.StructField("orientation", T.IntegerType(), True),
-            T.StructField("pixel_w", T.IntegerType(), True),
-            T.StructField("pixel_h", T.IntegerType(), True),
-            T.StructField("iso", T.IntegerType(), True),
-            T.StructField("year", T.IntegerType(), True),
-            T.StructField("month", T.IntegerType(), True),
-        ]
+def _exif_payload(i: int) -> bytes:
+    """The block-constant JPEG fixture i with a REAL APP1 Exif segment
+    spliced in after SOI — pixel dimensions in the Exif sub-IFD are set
+    to the true image dims, so the graded row cross-checks the metadata
+    against the image geometry."""
+    p = _jpeg_params(i)
+    m = _exif_meta(i)
+    payload = _jpeg_payload(i)
+    app1 = build_exif_app1(
+        m["make"], m["datetime"], m["orientation"], p["w"], p["h"], m["iso"],
     )
-    return media.mapInPandas(stats, schema)
+    return payload[:2] + app1 + payload[2:]
 
 
-def _q_exif_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return exif_stats(_exif_payloads(spark)).orderBy("media_id")
+_EXIF_SCHEMA = (
+    "media_id bigint NOT NULL, make string, orientation int, pixel_w int,"
+    " pixel_h int, iso int, year int, month int"
+)
+
+
+def _exif_stats(mid: int, payload: bytes) -> list:
+    """Parse EXIF from a payload; year/month split out of the EXIF
+    datetime string so the graded columns are integers + short strings."""
+    x = parse_exif(payload)
+    return [
+        (
+            mid, x["make"], x["orientation"], x["pixel_w"], x["pixel_h"],
+            x["iso"], int(x["datetime"][0:4]), int(x["datetime"][5:7]),
+        )
+    ]
 
 
 def _exif_oracle() -> str:
@@ -4673,23 +4103,9 @@ def _exif_oracle() -> str:
             (i, m["make"], m["orientation"], p["w"], p["h"], m["iso"],
              int(m["datetime"][0:4]), int(m["datetime"][5:7]))
         )
-    return "SELECT " + ", ".join(
-        [
-            "CAST(col0 AS BIGINT) AS media_id",
-            "col1 AS make",
-            "CAST(col2 AS INT) AS orientation",
-            "CAST(col3 AS INT) AS pixel_w",
-            "CAST(col4 AS INT) AS pixel_h",
-            "CAST(col5 AS INT) AS iso",
-            "CAST(col6 AS INT) AS year",
-            "CAST(col7 AS INT) AS month",
-        ]
-    ) + " FROM (VALUES " + ", ".join(
-        str(r) for r in rows
-    ) + ") ORDER BY media_id"
+    return _pinned_oracle(_EXIF_SCHEMA, rows)
 
 
-register("multimodal_exif_parse", _q_exif_parse, oracle=_exif_oracle())
 
 
 # ---------------------------------------------------------------- TGA codec
@@ -4874,77 +4290,27 @@ _TGA_PARAMS = [
 _N_TGA = len(_TGA_PARAMS)
 
 
-def _tga_payloads(spark: SparkSession, n: int = _N_TGA) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                w, h, ch, rle, topdown = _TGA_PARAMS[i]
-                yy, xx = np.mgrid[0:h, 0:w]
-                band = (4 * xx) // w
-                img = np.empty((h, w, ch), dtype=np.uint8)
-                for c in range(min(ch, 3)):
-                    v = np.select(
-                        [band == 0, band == 1, band == 2],
-                        [
-                            np.full((h, w), (23 * i + 9 * c) % 256),
-                            (xx % 2) * 90 + 14 * c + 5 * i,
-                            2 * xx + 3 * yy + 17 * c + 8 * i,
-                        ],
-                        default=7 * xx + 31 * c + 13 * i,
-                    )
-                    img[:, :, c] = (v % 256).astype(np.uint8)
-                if ch == 4:
-                    img[:, :, 3] = (
-                        (9 * xx + 5 * yy + 3 * i) % 256
-                    ).astype(np.uint8)
-                rows.append((i, encode_tga(img, rle=rle, topdown=topdown)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
-
-
-def tga_pixel_stats(media: DataFrame) -> DataFrame:
-    """Decode TGA payloads (decode_tga — alpha-aware); exact integer
-    channel sums plus the y-weighted green / x-weighted blue
-    anti-cancellation pair (the QOI stats shape, so a row-order bug —
-    the TGA-specific failure mode — flips ysum_g loudly)."""
+def _tga_payload(i: int) -> bytes:
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, ch, arr = decode_tga(bytes(payload))
-                a = arr.astype(np.int64)
-                yw = np.arange(h, dtype=np.int64)[:, None]
-                xw = np.arange(w, dtype=np.int64)[None, :]
-                sum_a = int(a[:, :, 3].sum()) if ch == 4 else 255 * w * h
-                out.append(
-                    (
-                        int(mid), w, h, ch,
-                        int(a[:, :, 0].sum()), int(a[:, :, 1].sum()),
-                        int(a[:, :, 2].sum()), sum_a,
-                        int((a[:, :, 1] * yw).sum()),
-                        int((a[:, :, 2] * xw).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height", "channels",
-                    "sum_r", "sum_g", "sum_b", "sum_a", "ysum_g", "xsum_b",
-                ],
-            )
-
-    return media.mapInPandas(stats, _QOI_STATS_SCHEMA)
-
-
-def _q_tga_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tga_pixel_stats(_tga_payloads(spark)).orderBy("media_id")
+    w, h, ch, rle, topdown = _TGA_PARAMS[i]
+    yy, xx = np.mgrid[0:h, 0:w]
+    band = (4 * xx) // w
+    img = np.empty((h, w, ch), dtype=np.uint8)
+    for c in range(min(ch, 3)):
+        v = np.select(
+            [band == 0, band == 1, band == 2],
+            [
+                np.full((h, w), (23 * i + 9 * c) % 256),
+                (xx % 2) * 90 + 14 * c + 5 * i,
+                2 * xx + 3 * yy + 17 * c + 8 * i,
+            ],
+            default=7 * xx + 31 * c + 13 * i,
+        )
+        img[:, :, c] = (v % 256).astype(np.uint8)
+    if ch == 4:
+        img[:, :, 3] = ((9 * xx + 5 * yy + 3 * i) % 256).astype(np.uint8)
+    return encode_tga(img, rle=rle, topdown=topdown)
 
 
 def _tga_oracle() -> str:
@@ -4991,7 +4357,6 @@ def _tga_oracle() -> str:
     """
 
 
-register("multimodal_tga_decode", _q_tga_decode, oracle=_tga_oracle())
 
 
 # --------------------------------------------------- perceptual image dedup
@@ -5030,53 +4395,38 @@ def _ahash_gray(i: int):
     return g.astype(np.uint8)
 
 
-def _ahash_payloads(spark: SparkSession) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+def _gray_tga(g, i: int) -> bytes:
+    """Gray fixture ``g`` of image i as a 3-channel TGA (RLE for odd i,
+    top-down when i // 2 is odd)."""
+    import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                g = _ahash_gray(i)
-                img = np.repeat(g[:, :, None], 3, axis=2)
-                rows.append(
-                    (i, encode_tga(img, rle=bool(i % 2),
-                                   topdown=bool((i // 2) % 2)))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(len(_AHASH_COEFFS)).mapInPandas(
-        gen, "media_id long, payload binary"
-    )
+    img = np.repeat(g[:, :, None], 3, axis=2)
+    return encode_tga(img, rle=bool(i % 2), topdown=bool((i // 2) % 2))
 
 
-def ahash_fingerprints(media: DataFrame) -> DataFrame:
-    """Decode TGA payloads and compute the 64-bit aHash as two 32-bit
+def _ahash_payload(i: int) -> bytes:
+    return _gray_tga(_ahash_gray(i), i)
+
+
+_FINGERPRINT_SCHEMA = "media_id bigint, hash_hi bigint, hash_lo bigint"
+
+
+def _ahash_stats(mid: int, payload: bytes) -> list:
+    """Decode a TGA payload and compute the 64-bit aHash as two 32-bit
     BIGINT halves (bits 32..63 stored unshifted so no value touches the
     int64 sign bit; XOR + bit_count work unchanged on halves)."""
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _w, _h, _ch, arr = decode_tga(bytes(payload))
-                g = arr[:, :, 0].astype(np.int64)  # channels are equal
-                blocks = g.reshape(8, _AHASH_H // 8, 8, _AHASH_W // 8).sum(
-                    axis=(1, 3)
-                )
-                bits = (blocks.flatten() * 64 > g.sum()).astype(np.int64)
-                lo = int((bits[:32] << np.arange(32, dtype=np.int64)).sum())
-                hi = int((bits[32:] << np.arange(32, dtype=np.int64)).sum())
-                out.append((int(mid), hi, lo))
-            yield pd.DataFrame(out, columns=["media_id", "hash_hi", "hash_lo"])
-
-    return media.mapInPandas(fp, "media_id long, hash_hi long, hash_lo long")
+    _w, _h, _ch, arr = decode_tga(payload)
+    g = arr[:, :, 0].astype(np.int64)  # channels are equal
+    blocks = g.reshape(8, _AHASH_H // 8, 8, _AHASH_W // 8).sum(axis=(1, 3))
+    bits = (blocks.flatten() * 64 > g.sum()).astype(np.int64)
+    lo = int((bits[:32] << np.arange(32, dtype=np.int64)).sum())
+    hi = int((bits[32:] << np.arange(32, dtype=np.int64)).sum())
+    return [(mid, hi, lo)]
 
 
-def _q_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fps = ahash_fingerprints(_ahash_payloads(spark))
+def _ahash_pairs(fps: DataFrame) -> DataFrame:
     a = fps.selectExpr("media_id AS media_a", "hash_hi AS ha", "hash_lo AS la")
     b = fps.selectExpr("media_id AS media_b", "hash_hi AS hb", "hash_lo AS lb")
     return (
@@ -5137,7 +4487,6 @@ def _ahash_oracle() -> str:
     """
 
 
-register("dedup_image_ahash", _q_image_ahash, oracle=_ahash_oracle())
 
 
 # ------------------------------------------------ DCT perceptual hash
@@ -5205,60 +4554,34 @@ def _phash_gray(i: int):
     return g.astype(np.uint8)
 
 
-def _phash_payloads(spark: SparkSession) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                g = _phash_gray(i)
-                img = np.repeat(g[:, :, None], 3, axis=2)
-                rows.append(
-                    (i, encode_tga(img, rle=bool(i % 2),
-                                   topdown=bool((i // 2) % 2)))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(_PHASH_N).mapInPandas(
-        gen, "media_id long, payload binary"
-    )
+def _phash_payload(i: int) -> bytes:
+    return _gray_tga(_phash_gray(i), i)
 
 
-def phash_fingerprints(media: DataFrame) -> DataFrame:
-    """Decode TGA payloads and compute the 64-bit DCT pHash as two
+def _phash_stats(mid: int, payload: bytes) -> list:
+    """Decode a TGA payload and compute the 64-bit DCT pHash as two
     32-bit BIGINT halves (bit pos = u*8 + v over the low 8x8 DCT
     block; bit = 1 iff the coefficient ranks in the per-image top 32
     under ascending (coeff, pos) order — row_number() > 32 in the
     oracle's window form)."""
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        basis = np.array(_PHASH_DCT, dtype=np.int64)
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _w, _h, _ch, arr = decode_tga(bytes(payload))
-                g = arr[:, :, 0].astype(np.int64)
-                c = (basis @ g @ basis.T).flatten()
-                order = np.lexsort((np.arange(64), c))
-                bits = np.zeros(64, dtype=np.int64)
-                bits[order[32:]] = 1
-                lo = int((bits[:32] << np.arange(32, dtype=np.int64)).sum())
-                hi = int((bits[32:] << np.arange(32, dtype=np.int64)).sum())
-                out.append((int(mid), hi, lo))
-            yield pd.DataFrame(
-                out, columns=["media_id", "hash_hi", "hash_lo"]
-            )
-
-    return media.mapInPandas(fp, "media_id long, hash_hi long, hash_lo long")
+    basis = np.array(_PHASH_DCT, dtype=np.int64)
+    _w, _h, _ch, arr = decode_tga(payload)
+    g = arr[:, :, 0].astype(np.int64)
+    c = (basis @ g @ basis.T).flatten()
+    order = np.lexsort((np.arange(64), c))
+    bits = np.zeros(64, dtype=np.int64)
+    bits[order[32:]] = 1
+    lo = int((bits[:32] << np.arange(32, dtype=np.int64)).sum())
+    hi = int((bits[32:] << np.arange(32, dtype=np.int64)).sum())
+    return [(mid, hi, lo)]
 
 
-def _q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _phash_pairs(fps: DataFrame) -> DataFrame:
     from dblab_ece_trino_spark.session import materialize
 
-    fps = materialize(phash_fingerprints(_phash_payloads(spark)))
+    fps = materialize(fps)
     # 8 bands x 8 bits: any pair at Hamming <= 7 shares a band
     band_expr = (
         "transform(sequence(0, {b} - 1), b -> named_struct("
@@ -5379,14 +4702,19 @@ def _phash_oracle() -> str:
     """.replace("FROM fp_src", "FROM bits")
 
 
-register("dedup_image_phash", _q_image_phash, oracle=_phash_oracle())
 
 
 # ------------------------------------------------ histogram equalization
-def hist_equalize_stats(media: DataFrame) -> DataFrame:
+_HIST_EQ_SCHEMA = (
+    "media_id bigint, width int, height int, in_sum bigint, eq_sum bigint,"
+    " eq_min bigint, eq_max bigint, eq_ysum bigint"
+)
+
+
+def _hist_eq_stats(mid: int, payload: bytes) -> list:
     """Histogram equalization (the textbook global contrast transform —
     Gonzalez & Woods ch. 3; the standard normalization pass before
-    classical feature extraction) over decoded TGA payloads, channel 0:
+    classical feature extraction) over a decoded TGA payload, channel 0:
 
         eq(v) = (cdf(v) - cdf_min) * 255 // (n_px - cdf_min)
 
@@ -5402,49 +4730,29 @@ def hist_equalize_stats(media: DataFrame) -> DataFrame:
     relationally — histogram GROUP BY, one cumulative window over the
     <=256-row value frame per image, remap join.
     """
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, _ch, arr = decode_tga(bytes(payload))
-                g = arr[:, :, 0].astype(np.int64)
-                npx = w * h
-                hist = np.bincount(g.flatten(), minlength=256)
-                cdf = hist.cumsum()
-                cdfmin = int(cdf[np.nonzero(hist)[0][0]])
-                if npx == cdfmin:
-                    # Constant-valued channel: every pixel is one value,
-                    # so cdf_min == n_px and the classic denominator is
-                    # zero.  Equalization of a constant image is the
-                    # identity up to an arbitrary level; emit 0 (the
-                    # same exact-zero-guard discipline as the moments
-                    # profile's constant-series NULLs).
-                    eq = np.zeros(256, dtype=np.int64)
-                else:
-                    eq = (cdf - cdfmin) * 255 // (npx - cdfmin)
-                o = eq[g]
-                yw = np.arange(h, dtype=np.int64)[:, None]
-                out.append(
-                    (int(mid), w, h, int(g.sum()), int(o.sum()),
-                     int(o.min()), int(o.max()), int((o * yw).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "in_sum",
-                         "eq_sum", "eq_min", "eq_max", "eq_ysum"],
-            )
-
-    return media.mapInPandas(
-        stats,
-        "media_id long, width int, height int, in_sum long, eq_sum long,"
-        " eq_min long, eq_max long, eq_ysum long",
-    )
-
-
-def _q_hist_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hist_equalize_stats(_tga_payloads(spark)).orderBy("media_id")
+    w, h, _ch, arr = decode_tga(payload)
+    g = arr[:, :, 0].astype(np.int64)
+    npx = w * h
+    hist = np.bincount(g.flatten(), minlength=256)
+    cdf = hist.cumsum()
+    cdfmin = int(cdf[np.nonzero(hist)[0][0]])
+    if npx == cdfmin:
+        # Constant-valued channel: every pixel is one value, so cdf_min
+        # == n_px and the classic denominator is zero.  Equalization of
+        # a constant image is the identity up to an arbitrary level;
+        # emit 0 (the same exact-zero-guard discipline as the moments
+        # profile's constant-series NULLs).
+        eq = np.zeros(256, dtype=np.int64)
+    else:
+        eq = (cdf - cdfmin) * 255 // (npx - cdfmin)
+    o = eq[g]
+    yw = np.arange(h, dtype=np.int64)[:, None]
+    return [
+        (mid, w, h, int(g.sum()), int(o.sum()), int(o.min()), int(o.max()),
+         int((o * yw).sum()))
+    ]
 
 
 def _hist_eq_oracle() -> str:
@@ -5501,15 +4809,19 @@ def _hist_eq_oracle() -> str:
     """
 
 
-register("multimodal_hist_equalize", _q_hist_equalize,
-         oracle=_hist_eq_oracle())
 
 
 # --------------------------------------------------- audio decimation
-def audio_decimate_stats(media: DataFrame) -> DataFrame:
+_RATE_OUT_SCHEMA = (
+    "media_id bigint, rate_out int, n_out bigint, sum_out bigint,"
+    " sumsq_out bigint, min_out bigint, max_out bigint, jsum_out bigint"
+)
+
+
+def _audio_decimate_stats(mid: int, payload: bytes) -> list:
     """Decimate-by-2 with a 2-tap boxcar pre-filter (the standard
     cheap anti-alias downsampling stage: average each sample pair, halve
-    the rate) over decoded WAV payloads — the audio TRANSFORM entry
+    the rate) over a decoded WAV payload — the audio TRANSFORM entry
     beyond decode, the hist-equalize analog.
 
     EXACT-INTEGER output: y_j = (s_2j + s_2j+1 + 4096) div 2 - 2048 —
@@ -5524,41 +4836,21 @@ def audio_decimate_stats(media: DataFrame) -> DataFrame:
     pass (per-file work, no shuffle); the oracle derives everything
     from the shared sawtooth closed form and never sees a byte.
     """
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, s = decode_wav(bytes(payload))
-                s64 = s.astype("int64")
-                m = len(s64) // 2
-                if m <= 0:
-                    # single-sample clip: no output pairs — the oracle
-                    # omits the row (empty generate_series), match it
-                    continue
-                y = (s64[: 2 * m : 2] + s64[1 : 2 * m : 2] + 4096) // 2 - 2048
-                jw = np.arange(m, dtype="int64")
-                out.append(
-                    (int(mid), int(rate) // 2, m, int(y.sum()),
-                     int((y * y).sum()), int(y.min()), int(y.max()),
-                     int((y * jw).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "rate_out", "n_out", "sum_out",
-                         "sumsq_out", "min_out", "max_out", "jsum_out"],
-            )
-
-    return media.mapInPandas(
-        stats,
-        "media_id long, rate_out int, n_out long, sum_out long,"
-        " sumsq_out long, min_out long, max_out long, jsum_out long",
-    )
-
-
-def _q_audio_decimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return audio_decimate_stats(_wav_payloads(spark)).orderBy("media_id")
+    rate, s = decode_wav(payload)
+    s64 = s.astype("int64")
+    m = len(s64) // 2
+    if m <= 0:
+        # single-sample clip: no output pairs — the oracle omits the
+        # row (empty generate_series), match it
+        return []
+    y = (s64[: 2 * m : 2] + s64[1 : 2 * m : 2] + 4096) // 2 - 2048
+    jw = np.arange(m, dtype="int64")
+    return [
+        (mid, int(rate) // 2, m, int(y.sum()), int((y * y).sum()),
+         int(y.min()), int(y.max()), int((y * jw).sum()))
+    ]
 
 
 def _audio_decimate_oracle() -> str:
@@ -5591,8 +4883,6 @@ def _audio_decimate_oracle() -> str:
     """
 
 
-register("multimodal_audio_decimate", _q_audio_decimate,
-         oracle=_audio_decimate_oracle())
 
 
 # ----------------------------------------------------------- PCX codec
@@ -5746,63 +5036,15 @@ def _pcx_pixel(i: int, x, y, c, w: int, h: int):
     return np.where(b == 0, band0, np.where(b == 1, band1, band2))
 
 
-def _pcx_payloads(spark: SparkSession, n: int = _N_PCX) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                w, h = _PCX_PARAMS[i]
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = np.empty((h, w, 3), dtype=np.uint8)
-                for c in range(3):
-                    img[:, :, c] = _pcx_pixel(i, xx, yy, c, w, h).astype(
-                        np.uint8
-                    )
-                rows.append((i, encode_pcx(img)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
-
-
-def pcx_pixel_stats(media: DataFrame) -> DataFrame:
-    """Decode PCX payloads; exact integer channel sums plus the
-    y-weighted green / x-weighted blue anti-cancellation pair (the
-    QOI/TGA stats shape — a plane-deinterleave bug flips them loudly)."""
+def _pcx_payload(i: int) -> bytes:
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, ch, arr = decode_pcx(bytes(payload))
-                a = arr.astype(np.int64)
-                yw = np.arange(h, dtype=np.int64)[:, None]
-                xw = np.arange(w, dtype=np.int64)[None, :]
-                out.append(
-                    (
-                        int(mid), w, h, ch,
-                        int(a[:, :, 0].sum()), int(a[:, :, 1].sum()),
-                        int(a[:, :, 2].sum()), 255 * w * h,
-                        int((a[:, :, 1] * yw).sum()),
-                        int((a[:, :, 2] * xw).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height", "channels",
-                    "sum_r", "sum_g", "sum_b", "sum_a", "ysum_g", "xsum_b",
-                ],
-            )
-
-    return media.mapInPandas(stats, _QOI_STATS_SCHEMA)
-
-
-def _q_pcx_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pcx_pixel_stats(_pcx_payloads(spark)).orderBy("media_id")
+    w, h = _PCX_PARAMS[i]
+    yy, xx = np.mgrid[0:h, 0:w]
+    img = np.empty((h, w, 3), dtype=np.uint8)
+    for c in range(3):
+        img[:, :, c] = _pcx_pixel(i, xx, yy, c, w, h).astype(np.uint8)
+    return encode_pcx(img)
 
 
 def _pcx_oracle() -> str:
@@ -5841,58 +5083,46 @@ def _pcx_oracle() -> str:
     """
 
 
-register("multimodal_pcx_decode", _q_pcx_decode, oracle=_pcx_oracle())
 
 
 # ----------------------------------------------- ViT-style patch tiling
-def image_tile_stats(media: DataFrame, tile: int = 8) -> DataFrame:
+_TILE = 8
+
+
+def _image_tile_stats(mid: int, payload: bytes) -> list:
     """Patch tiling for vision-training pipelines (the ViT / CLIP
-    preprocessing shape): decode, split into ``tile`` x ``tile``
-    patches (edge patches truncated, never padded — the per-patch pixel
-    count column carries the true size), and emit exact integer
-    per-patch statistics: pixel count, RGB sum, and the min/max of the
-    per-pixel channel total.  Decode + tile + reduce run in ONE Arrow
+    preprocessing shape): decode, split into _TILE x _TILE patches
+    (edge patches truncated, never padded — the per-patch pixel count
+    column carries the true size), and emit exact integer per-patch
+    statistics: pixel count, RGB sum, and the min/max of the per-pixel
+    channel total.  Decode + tile + reduce run in ONE Arrow
     ``mapInPandas`` pass (per-file work, no shuffle); the output frame
     is |patches| rows — the unit a downstream patch-embedding or
     patch-dedup stage consumes.
 
-    100 TB shape: identical to the codec entries — the only shuffle is
-    the final ORDER BY of the graded projection; patch extraction is
+    100 TB shape: identical to the codec entries — patch extraction is
     numpy slicing inside the Arrow batch, never per-row Python.
     """
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, _ch, arr = decode_pcx(bytes(payload))
-                s = arr.astype(np.int64).sum(axis=2)  # per-pixel r+g+b
-                for ty in range((h + tile - 1) // tile):
-                    for tx in range((w + tile - 1) // tile):
-                        blk = s[ty * tile:(ty + 1) * tile,
-                                tx * tile:(tx + 1) * tile]
-                        out.append(
-                            (int(mid), ty, tx, int(blk.size),
-                             int(blk.sum()), int(blk.min()), int(blk.max()))
-                        )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "tile_y", "tile_x", "n_px",
-                         "sum_rgb", "min_px", "max_px"],
+    tile = _TILE
+    w, h, _ch, arr = decode_pcx(payload)
+    s = arr.astype(np.int64).sum(axis=2)  # per-pixel r+g+b
+    out = []
+    for ty in range((h + tile - 1) // tile):
+        for tx in range((w + tile - 1) // tile):
+            blk = s[ty * tile:(ty + 1) * tile, tx * tile:(tx + 1) * tile]
+            out.append(
+                (mid, ty, tx, int(blk.size), int(blk.sum()), int(blk.min()),
+                 int(blk.max()))
             )
-
-    return media.mapInPandas(
-        stats,
-        "media_id long, tile_y int, tile_x int, n_px long,"
-        " sum_rgb long, min_px long, max_px long",
-    )
+    return out
 
 
-def _q_image_tile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return image_tile_stats(_pcx_payloads(spark)).orderBy(
-        "media_id", "tile_y", "tile_x"
-    )
+_TILE_SCHEMA = (
+    "media_id bigint, tile_y int, tile_x int, n_px bigint,"
+    " sum_rgb bigint, min_px bigint, max_px bigint"
+)
 
 
 def _image_tile_oracle() -> str:
@@ -5933,16 +5163,19 @@ def _image_tile_oracle() -> str:
     """
 
 
-register("multimodal_image_tile", _q_image_tile, oracle=_image_tile_oracle())
 
 
 # --------------------------------------------- audio peak normalization
 _NORM_TARGET = 30000
 
 
-def audio_normalize_stats(
-    media: DataFrame, target: int = _NORM_TARGET
-) -> DataFrame:
+_NORM_SCHEMA = (
+    "media_id bigint, n_samp bigint, peak_in bigint, gain_ppm bigint,"
+    " peak_out bigint, sum_out bigint, sumsq_out bigint"
+)
+
+
+def _audio_normalize_stats(mid: int, payload: bytes) -> list:
     """Peak normalization — the standard loudness-alignment pass before
     audio feature extraction: per file, gain_ppm = floor(target * 1e6 /
     peak_abs) and every sample maps to sign(s) * (|s| * gain_ppm div
@@ -5958,38 +5191,17 @@ def audio_normalize_stats(
     """
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _rate, samples = decode_wav(bytes(payload))
-                s = samples.astype(np.int64)
-                peak = int(np.abs(s).max())
-                if peak == 0:
-                    out.append((int(mid), len(s), 0, 0, 0, 0, 0))
-                    continue
-                gain = target * 1_000_000 // peak
-                norm = np.sign(s) * (np.abs(s) * gain // 1_000_000)
-                out.append(
-                    (int(mid), len(s), peak, int(gain),
-                     int(np.abs(norm).max()), int(norm.sum()),
-                     int((norm * norm).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "n_samp", "peak_in", "gain_ppm",
-                         "peak_out", "sum_out", "sumsq_out"],
-            )
-
-    return media.mapInPandas(
-        stats,
-        "media_id long, n_samp long, peak_in long, gain_ppm long,"
-        " peak_out long, sum_out long, sumsq_out long",
-    )
-
-
-def _q_audio_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return audio_normalize_stats(_wav_payloads(spark)).orderBy("media_id")
+    _rate, samples = decode_wav(payload)
+    s = samples.astype(np.int64)
+    peak = int(np.abs(s).max())
+    if peak == 0:
+        return [(mid, len(s), 0, 0, 0, 0, 0)]
+    gain = _NORM_TARGET * 1_000_000 // peak
+    norm = np.sign(s) * (np.abs(s) * gain // 1_000_000)
+    return [
+        (mid, len(s), peak, int(gain), int(np.abs(norm).max()),
+         int(norm.sum()), int((norm * norm).sum()))
+    ]
 
 
 def _audio_normalize_oracle() -> str:
@@ -6029,8 +5241,6 @@ def _audio_normalize_oracle() -> str:
     """
 
 
-register("multimodal_audio_normalize", _q_audio_normalize,
-         oracle=_audio_normalize_oracle())
 
 
 # ----------------------------------------------------- Sun Raster codec
@@ -6192,63 +5402,15 @@ def _ras_pixel(i: int, x, y, c, w: int, h: int):
     )
 
 
-def _ras_payloads(spark: SparkSession, n: int = _N_RAS) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                w, h, rle = _RAS_PARAMS[i]
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = np.empty((h, w, 3), dtype=np.uint8)
-                for c in range(3):
-                    img[:, :, c] = _ras_pixel(i, xx, yy, c, w, h).astype(
-                        np.uint8
-                    )
-                rows.append((i, encode_sunras(img, rle=rle)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
-
-
-def sunras_pixel_stats(media: DataFrame) -> DataFrame:
-    """Decode Sun Raster payloads; the QOI/TGA/PCX stats shape (exact
-    channel sums + y-weighted green / x-weighted blue — a BGR-order or
-    row-pad bug flips them loudly)."""
+def _ras_payload(i: int) -> bytes:
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, ch, arr = decode_sunras(bytes(payload))
-                a = arr.astype(np.int64)
-                yw = np.arange(h, dtype=np.int64)[:, None]
-                xw = np.arange(w, dtype=np.int64)[None, :]
-                out.append(
-                    (
-                        int(mid), w, h, ch,
-                        int(a[:, :, 0].sum()), int(a[:, :, 1].sum()),
-                        int(a[:, :, 2].sum()), 255 * w * h,
-                        int((a[:, :, 1] * yw).sum()),
-                        int((a[:, :, 2] * xw).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height", "channels",
-                    "sum_r", "sum_g", "sum_b", "sum_a", "ysum_g", "xsum_b",
-                ],
-            )
-
-    return media.mapInPandas(stats, _QOI_STATS_SCHEMA)
-
-
-def _q_sunras_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sunras_pixel_stats(_ras_payloads(spark)).orderBy("media_id")
+    w, h, rle = _RAS_PARAMS[i]
+    yy, xx = np.mgrid[0:h, 0:w]
+    img = np.empty((h, w, 3), dtype=np.uint8)
+    for c in range(3):
+        img[:, :, c] = _ras_pixel(i, xx, yy, c, w, h).astype(np.uint8)
+    return encode_sunras(img, rle=rle)
 
 
 def _sunras_oracle() -> str:
@@ -6289,8 +5451,6 @@ def _sunras_oracle() -> str:
     """
 
 
-register("multimodal_sunras_decode", _q_sunras_decode,
-         oracle=_sunras_oracle())
 
 
 # --------------------------------------------- ICO container codec (r12)
@@ -6418,102 +5578,48 @@ def decode_ico(payload: bytes):
     return bw, bh, 3, rows[::-1][:, :, ::-1], len(entries), False
 
 
-_ICO_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("n_entries", T.IntegerType(), True),
-        T.StructField("png_embedded", T.BooleanType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-        T.StructField("ysum_r", T.LongType(), True),
-    ]
+_ICO_SCHEMA = (
+    "media_id bigint NOT NULL, n_entries int, png_embedded boolean,"
+    " width int, height int, sum_r bigint, sum_g bigint, sum_b bigint,"
+    " ysum_r bigint"
 )
 
 _N_ICO = 18
 
 
-def _ico_payloads(spark: SparkSession, n: int = _N_ICO) -> DataFrame:
-    """n two-entry icons: a small classic entry plus a LARGE entry
-    that is PNG-embedded every 6th icon — decode must pick the large
-    entry and route its format correctly."""
+def _ico_payload(i: int) -> bytes:
+    """Two-entry icon i: a small classic entry plus a LARGE entry that
+    is PNG-embedded every 6th icon — decode must pick the large entry
+    and route its format correctly."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                big_kind = "png" if i % 6 == 0 else "bmp"
+    def fn(x, y):
+        return (
+            (x * 11 + y * 5 + i) % 256,
+            (x * 3 + y * 13 + 2 * i) % 256,
+            (x * 9 + y * 7 + 3 * i) % 256,
+        )
 
-                def fn(x, y, i=i):
-                    return (
-                        (x * 11 + y * 5 + i) % 256,
-                        (x * 3 + y * 13 + 2 * i) % 256,
-                        (x * 9 + y * 7 + 3 * i) % 256,
-                    )
-
-                payload = encode_ico(
-                    [
-                        ("bmp", 8 + i % 3, 6 + i % 2, fn),
-                        (big_kind, 17 + i % 4, 9 + i % 3, fn),
-                    ]
-                )
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    ids = spark.range(0, n, 1, 4)
-    return ids.mapInPandas(
-        gen,
-        T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), True),
-            ]
-        ),
+    big_kind = "png" if i % 6 == 0 else "bmp"
+    return encode_ico(
+        [("bmp", 8 + i % 3, 6 + i % 2, fn), (big_kind, 17 + i % 4, 9 + i % 3, fn)]
     )
 
 
-def ico_pixel_stats(media: DataFrame) -> DataFrame:
-    """Largest-entry pixel statistics over ICO payloads — one Arrow
-    mapInPandas pass, per-file work (the codec-seam discipline)."""
+def _ico_stats(mid: int, payload: bytes) -> list:
+    """Largest-entry pixel statistics of an ICO payload."""
+    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, _ch, arr, n_entries, is_png = decode_ico(bytes(payload))
-                sums = arr.reshape(-1, 3).sum(axis=0, dtype="int64")
-                ys = np.arange(h, dtype="int64")
-                ysum_r = int(
-                    (arr[:, :, 0].sum(axis=1, dtype="int64") * ys).sum()
-                )
-                out.append(
-                    (int(mid), n_entries, bool(is_png), w, h,
-                     int(sums[0]), int(sums[1]), int(sums[2]), ysum_r)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "n_entries", "png_embedded", "width",
-                    "height", "sum_r", "sum_g", "sum_b", "ysum_r",
-                ],
-            )
-
-    return media.mapInPandas(stats, _ICO_STATS_SCHEMA)
+    w, h, _ch, arr, n_entries, is_png = decode_ico(payload)
+    sums = arr.reshape(-1, 3).sum(axis=0, dtype="int64")
+    ys = np.arange(h, dtype="int64")
+    ysum_r = int((arr[:, :, 0].sum(axis=1, dtype="int64") * ys).sum())
+    return [
+        (mid, n_entries, bool(is_png), w, h,
+         int(sums[0]), int(sums[1]), int(sums[2]), ysum_r)
+    ]
 
 
-def _q_ico_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ico_pixel_stats(_ico_payloads(spark)).orderBy("media_id")
-
-
-register(
-    "multimodal_ico_decode",
-    _q_ico_decode,
-    oracle=f"""
+_ICO_ORACLE = f"""
     WITH dims AS (
       SELECT i, 17 + i % 4 AS w, 9 + i % 3 AS h
       FROM range({_N_ICO}) t(i)
@@ -6534,8 +5640,7 @@ register(
     FROM px
     GROUP BY i, w, h
     ORDER BY media_id
-    """,
-)
+    """
 
 
 # ------------------------------------------- stereo downmix codec (r12)
@@ -6608,94 +5713,46 @@ def downmix_stereo(payload: bytes):
     return rate, mono.astype(np.int16)
 
 
-_DOWNMIX_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("n_samples", T.LongType(), True),
-        T.StructField("sum_mono", T.LongType(), True),
-        T.StructField("min_mono", T.IntegerType(), True),
-        T.StructField("max_mono", T.IntegerType(), True),
-        T.StructField("ksum_mono", T.LongType(), True),
-    ]
+_DOWNMIX_SCHEMA = (
+    "media_id bigint NOT NULL, sample_rate int, n_samples bigint,"
+    " sum_mono bigint, min_mono int, max_mono int, ksum_mono bigint"
 )
 
 _N_DOWNMIX = 16
 _DOWNMIX_LEN = 600
 
 
-def _stereo_payloads(spark: SparkSession, n: int = _N_DOWNMIX) -> DataFrame:
-    """n stereo fixtures built as L = s + d, R = s - d (sum/diff
+def _stereo_payload(i: int) -> bytes:
+    """Stereo fixture i built as L = s + d, R = s - d (sum/diff
     construction: L + R = 2s exactly, so the downmix equals the
     closed-form s(k) and the oracle never touches floor semantics —
     the odd-sum floor path is pinned separately in pytest)."""
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                k = np.arange(_DOWNMIX_LEN, dtype=np.int64)
-                s = ((k * 7 + i * 13) % 401) - 200
-                d = ((k * 5 + i * 3) % 101) - 50
-                payload = encode_stereo_wav(
-                    (s + d).astype("<i2"), (s - d).astype("<i2"),
-                    rate=8000 + 100 * i,
-                )
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    ids = spark.range(0, n, 1, 4)
-    return ids.mapInPandas(
-        gen,
-        T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), True),
-            ]
-        ),
+    k = np.arange(_DOWNMIX_LEN, dtype=np.int64)
+    s = ((k * 7 + i * 13) % 401) - 200
+    d = ((k * 5 + i * 3) % 101) - 50
+    return encode_stereo_wav(
+        (s + d).astype("<i2"), (s - d).astype("<i2"), rate=8000 + 100 * i
     )
 
 
-def downmix_stats(media: DataFrame) -> DataFrame:
-    """Downmix + amplitude statistics in ONE Arrow pass (per-file
-    work); ksum_mono is the index-weighted anti-cancellation column
-    (a sample-order bug moves it, the plain sum doesn't)."""
+def _downmix_stats(mid: int, payload: bytes) -> list:
+    """Downmix + amplitude statistics; ksum_mono is the index-weighted
+    anti-cancellation column (a sample-order bug moves it, the plain
+    sum doesn't)."""
+    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, mono = downmix_stereo(bytes(payload))
-                m = mono.astype(np.int64)
-                k = np.arange(m.size, dtype=np.int64)
-                out.append(
-                    (int(mid), int(rate), int(m.size), int(m.sum()),
-                     int(m.min()), int(m.max()), int((k * m).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "sample_rate", "n_samples", "sum_mono",
-                    "min_mono", "max_mono", "ksum_mono",
-                ],
-            )
-
-    return media.mapInPandas(stats, _DOWNMIX_SCHEMA)
+    rate, mono = downmix_stereo(payload)
+    m = mono.astype(np.int64)
+    k = np.arange(m.size, dtype=np.int64)
+    return [
+        (mid, int(rate), int(m.size), int(m.sum()), int(m.min()),
+         int(m.max()), int((k * m).sum()))
+    ]
 
 
-def _q_audio_downmix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return downmix_stats(_stereo_payloads(spark)).orderBy("media_id")
-
-
-register(
-    "multimodal_audio_downmix",
-    _q_audio_downmix,
-    oracle=f"""
+_DOWNMIX_ORACLE = f"""
     WITH s AS (
       SELECT i, k, ((k * 7 + i * 13) % 401) - 200 AS mono
       FROM range({_N_DOWNMIX}) t(i),
@@ -6711,8 +5768,7 @@ register(
     FROM s
     GROUP BY i
     ORDER BY media_id
-    """,
-)
+    """
 
 
 # ------------------------------------------------- REAL Sun AU codec (r12)
@@ -6826,55 +5882,17 @@ def _au_signal(i: int, n: int, encoding: int):
     return (k * step) % (2 * amp) - amp
 
 
-def _au_payloads(spark: SparkSession, n: int = _N_AU) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                n_samp, rate, enc = _AU_PARAMS[i]
-                rows.append(
-                    (i, encode_au(_au_signal(i, n_samp, enc), rate, enc))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
+def _au_payload(i: int) -> bytes:
+    n_samp, rate, enc = _AU_PARAMS[i]
+    return encode_au(_au_signal(i, n_samp, enc), rate, enc)
 
 
-def au_stats(media: DataFrame) -> DataFrame:
-    """Decode Sun AU payloads; the G.711 stats shape (ksum guards
+def _au_stats(mid: int, payload: bytes) -> list:
+    """Decode a Sun AU payload; the G.711 stats shape (ksum guards
     sample ORDER — a byte-order bug on the 16-bit clips flips it
     loudly; sum_abs separates the mu-law grid from the linear ones)."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, codec, s = decode_au(bytes(payload))
-                s64 = s.astype(np.int64)
-                k = np.arange(len(s64), dtype=np.int64)
-                out.append(
-                    (
-                        int(mid), int(rate), codec, len(s64), int(s64.sum()),
-                        int(np.abs(s64).sum()), int((k * s64).sum()),
-                        int(s64[-1]) if len(s64) else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "sample_rate", "codec", "n_samples",
-                    "sum_amp", "sum_abs", "ksum", "last_sample",
-                ],
-            )
-
-    return media.mapInPandas(stats, _G711_STATS_SCHEMA)
-
-
-def _q_au_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return au_stats(_au_payloads(spark)).orderBy("media_id")
+    rate, codec, s = decode_au(payload)
+    return [_sample_row(mid, rate, codec, s)]
 
 
 # Pinned per-clip statistics — generated ONCE by the independent
@@ -6897,25 +5915,8 @@ _AU_EXPECTED = [
     (11, 8000, 'ulaw', 63, -46732, 383156, 316900, 7164),
 ]
 
-_AU_ORACLE_TPL = "SELECT " + ", ".join(
-    [
-        "CAST(col0 AS BIGINT) AS media_id",
-        "CAST(col1 AS INT) AS sample_rate",
-        "col2 AS codec",
-        "CAST(col3 AS BIGINT) AS n_samples",
-        "CAST(col4 AS BIGINT) AS sum_amp",
-        "CAST(col5 AS BIGINT) AS sum_abs",
-        "CAST(col6 AS BIGINT) AS ksum",
-        "CAST(col7 AS INT) AS last_sample",
-    ]
-) + " FROM (VALUES {rows}) ORDER BY media_id"
+_AU_ORACLE = _pinned_oracle(_G711_SCHEMA, _AU_EXPECTED)
 
-
-_AU_ORACLE = _AU_ORACLE_TPL.format(
-    rows=", ".join(str(r) for r in _AU_EXPECTED)
-)
-
-register("multimodal_au_decode", _q_au_decode, oracle=_AU_ORACLE)
 
 
 # ------------------------------------------------- REAL XBM codec (r12)
@@ -7032,72 +6033,36 @@ def _xbm_bit(i: int, x, y):
     return ((3 * x + 5 * y + 11 * i) % 13) < 6
 
 
-def _xbm_payloads(spark: SparkSession, n: int = _N_XBM) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+def _xbm_payload(i: int) -> bytes:
+    import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                w, h, x10 = _XBM_PARAMS[i]
-                yy, xx = np.mgrid[0:h, 0:w]
-                bits = _xbm_bit(i, xx, yy).astype(np.uint8)
-                rows.append((i, encode_xbm(bits, f"img{i}", x10=x10)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
+    w, h, x10 = _XBM_PARAMS[i]
+    yy, xx = np.mgrid[0:h, 0:w]
+    bits = _xbm_bit(i, xx, yy).astype(np.uint8)
+    return encode_xbm(bits, f"img{i}", x10=x10)
 
 
-_XBM_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_set", T.LongType()),
-        T.StructField("xsum_set", T.LongType()),
-        T.StructField("ysum_set", T.LongType()),
-        T.StructField("first_row_set", T.LongType()),
-    ]
+_XBM_SCHEMA = (
+    "media_id bigint, width int, height int, n_set bigint,"
+    " xsum_set bigint, ysum_set bigint, first_row_set bigint"
 )
 
 
-def xbm_bit_stats(media: DataFrame) -> DataFrame:
-    """Decode XBM payloads; exact set-bit statistics.  xsum guards the
+def _xbm_stats(mid: int, payload: bytes) -> list:
+    """Decode an XBM payload; exact set-bit statistics.  xsum guards the
     LSB-first bit order (an MSB-first bug mirrors each byte and shifts
     the x centroid loudly), ysum the row order, first_row_set the
     stride arithmetic."""
+    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, bits = decode_xbm(bytes(payload))
-                b = bits.astype(np.int64)
-                yw = np.arange(h, dtype=np.int64)[:, None]
-                xw = np.arange(w, dtype=np.int64)[None, :]
-                out.append(
-                    (
-                        int(mid), w, h, int(b.sum()),
-                        int((b * xw).sum()), int((b * yw).sum()),
-                        int(b[0, :].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height", "n_set",
-                    "xsum_set", "ysum_set", "first_row_set",
-                ],
-            )
-
-    return media.mapInPandas(stats, _XBM_STATS_SCHEMA)
-
-
-def _q_xbm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return xbm_bit_stats(_xbm_payloads(spark)).orderBy("media_id")
+    w, h, bits = decode_xbm(payload)
+    b = bits.astype(np.int64)
+    yw = np.arange(h, dtype=np.int64)[:, None]
+    xw = np.arange(w, dtype=np.int64)[None, :]
+    return [
+        (mid, w, h, int(b.sum()), int((b * xw).sum()), int((b * yw).sum()),
+         int(b[0, :].sum()))
+    ]
 
 
 def _xbm_oracle() -> str:
@@ -7128,7 +6093,6 @@ def _xbm_oracle() -> str:
     """
 
 
-register("multimodal_xbm_decode", _q_xbm_decode, oracle=_xbm_oracle())
 
 
 # ------------------------------------------------ REAL AIFF codec (r12)
@@ -7258,65 +6222,17 @@ _AIFF_PARAMS = [
 _N_AIFF = len(_AIFF_PARAMS)
 
 
-def _aiff_payloads(spark: SparkSession, n: int = _N_AIFF) -> DataFrame:
-    """Sawtooth clips (the WAV fixture family: s_k = (k*step) % (2A)
+def _aiff_payload(i: int) -> bytes:
+    """Sawtooth clip i (the WAV fixture family: s_k = (k*step) % (2A)
     - A, closed form shared with the oracle)."""
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                n_samp, rate, off, cf = _AIFF_PARAMS[i]
-                step = 60 + 13 * i
-                amp = 1100 + 150 * (i % 5)
-                k = np.arange(n_samp, dtype="int64")
-                s = (k * step) % (2 * amp) - amp
-                rows.append(
-                    (i, encode_aiff(s, rate, ssnd_offset=off,
-                                    comm_first=cf))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
-
-
-def aiff_stats(media: DataFrame) -> DataFrame:
-    """Decode AIFF payloads; the WAV stats shape (exact integer
-    amplitude statistics + rising zero crossings)."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, s = decode_aiff(bytes(payload))
-                s64 = s.astype("int64")
-                rising = int(
-                    np.count_nonzero((s64[:-1] < 0) & (s64[1:] >= 0))
-                )
-                out.append(
-                    (
-                        int(mid), int(rate), len(s64), int(s64.sum()),
-                        int((s64 * s64).sum()), rising,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "sample_rate", "n_samples",
-                    "sum_amp", "sum_sq", "rising_crossings",
-                ],
-            )
-
-    return media.mapInPandas(stats, _WAV_STATS_SCHEMA)
-
-
-def _q_aiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return aiff_stats(_aiff_payloads(spark)).orderBy("media_id")
+    n_samp, rate, off, cf = _AIFF_PARAMS[i]
+    step = 60 + 13 * i
+    amp = 1100 + 150 * (i % 5)
+    k = np.arange(n_samp, dtype="int64")
+    s = (k * step) % (2 * amp) - amp
+    return encode_aiff(s, rate, ssnd_offset=off, comm_first=cf)
 
 
 def _aiff_oracle() -> str:
@@ -7346,7 +6262,6 @@ def _aiff_oracle() -> str:
     """
 
 
-register("multimodal_aiff_decode", _q_aiff_decode, oracle=_aiff_oracle())
 
 
 # ------------------------------------------------ REAL FLAC codec (r13)
@@ -8081,69 +6996,18 @@ _FLAC_PARAMS = [
 _N_FLAC = len(_FLAC_PARAMS)
 
 
-def _flac_payloads(spark: SparkSession, n: int = _N_FLAC) -> DataFrame:
-    """Sawtooth clips FLAC-encoded with per-fixture subframe modes."""
+def _flac_payload(i: int) -> bytes:
+    """Sawtooth clip i FLAC-encoded with its fixture's subframe mode
+    (bit-exact lossless decode makes the closed-form sawtooth oracle
+    apply unchanged)."""
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                n_samp, rate, bs, mode, po, step, amp, kw = _FLAC_PARAMS[i]
-                k = np.arange(n_samp, dtype="int64")
-                s = (k * step) % (2 * amp) - amp
-                rows.append(
-                    (
-                        i,
-                        encode_flac(
-                            s, rate, block_size=bs, mode=mode,
-                            partition_order=po, **kw
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return spark.range(n).mapInPandas(gen, "media_id long, payload binary")
-
-
-def flac_stats(media: DataFrame) -> DataFrame:
-    """Decode FLAC payloads through the generic audio seam; the WAV
-    stats shape (exact integer amplitude statistics + rising zero
-    crossings) — bit-exact lossless decode makes the closed-form
-    sawtooth oracle apply unchanged."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, s = decode_flac(bytes(payload))
-                s64 = s.astype("int64")
-                rising = int(
-                    np.count_nonzero((s64[:-1] < 0) & (s64[1:] >= 0))
-                )
-                out.append(
-                    (
-                        int(mid), int(rate), len(s64), int(s64.sum()),
-                        int((s64 * s64).sum()), rising,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "sample_rate", "n_samples",
-                    "sum_amp", "sum_sq", "rising_crossings",
-                ],
-            )
-
-    return media.mapInPandas(stats, _WAV_STATS_SCHEMA)
-
-
-def _q_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return flac_stats(_flac_payloads(spark)).orderBy("media_id")
+    n_samp, rate, bs, mode, po, step, amp, kw = _FLAC_PARAMS[i]
+    k = np.arange(n_samp, dtype="int64")
+    s = (k * step) % (2 * amp) - amp
+    return encode_flac(
+        s, rate, block_size=bs, mode=mode, partition_order=po, **kw
+    )
 
 
 def _flac_oracle() -> str:
@@ -8173,7 +7037,6 @@ def _flac_oracle() -> str:
     """
 
 
-register("multimodal_flac_decode", _q_flac_decode, oracle=_flac_oracle())
 
 
 # --------------------------- fractional audio resampling (round 14)
@@ -8181,9 +7044,9 @@ _RS_UP = 8     # src rate / dst rate = 8/5 (8000 -> 5000 Hz), the
 _RS_DOWN = 5   # non-integer-ratio case decimate-by-2 cannot express
 
 
-def audio_resample_stats(media: DataFrame) -> DataFrame:
+def _audio_resample_stats(mid: int, payload: bytes) -> list:
     """Fractional-ratio linear-interpolation resampling (8000 ->
-    5000 Hz) over decoded WAV payloads — the production ML
+    5000 Hz) over a decoded WAV payload — the production ML
     preprocessing resampler (44.1k -> 16k is the canonical instance of
     a NON-integer ratio), where ``multimodal_audio_decimate`` covers
     only the integer-factor boxcar case.  Output sample j sits at
@@ -8205,49 +7068,28 @@ def audio_resample_stats(media: DataFrame) -> DataFrame:
     pass (per-file work, no shuffle); the oracle derives every value
     from the shared sawtooth closed form and never sees a byte.
     """
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, s = decode_wav(bytes(payload))
-                s64 = s.astype("int64")
-                n = len(s64)
-                m = (_RS_DOWN * (n - 1)) // _RS_UP
-                if m <= 0:
-                    # a <=2-sample clip yields no output samples; the
-                    # oracle's empty generate_series omits the row, so
-                    # skip it here too instead of crashing on empty
-                    # reductions
-                    continue
-                j = np.arange(m, dtype="int64")
-                num = _RS_UP * j
-                idx = num // _RS_DOWN
-                frac = num % _RS_DOWN
-                v = s64[idx] * (_RS_DOWN - frac) + s64[idx + 1] * frac
-                y = (v + 40000) // _RS_DOWN - 8000
-                jw = np.arange(m, dtype="int64")
-                out.append(
-                    (int(mid), int(rate) * _RS_DOWN // _RS_UP, m,
-                     int(y.sum()), int((y * y).sum()),
-                     int(y.min()), int(y.max()), int((y * jw).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "rate_out", "n_out", "sum_out",
-                         "sumsq_out", "min_out", "max_out", "jsum_out"],
-            )
-
-    return media.mapInPandas(
-        stats,
-        "media_id long, rate_out int, n_out long, sum_out long,"
-        " sumsq_out long, min_out long, max_out long, jsum_out long",
-    )
-
-
-def _q_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return audio_resample_stats(_wav_payloads(spark)).orderBy("media_id")
+    rate, s = decode_wav(payload)
+    s64 = s.astype("int64")
+    n = len(s64)
+    m = (_RS_DOWN * (n - 1)) // _RS_UP
+    if m <= 0:
+        # a <=2-sample clip yields no output samples; the oracle's
+        # empty generate_series omits the row, so skip it here too
+        # instead of crashing on empty reductions
+        return []
+    j = np.arange(m, dtype="int64")
+    num = _RS_UP * j
+    idx = num // _RS_DOWN
+    frac = num % _RS_DOWN
+    v = s64[idx] * (_RS_DOWN - frac) + s64[idx + 1] * frac
+    y = (v + 40000) // _RS_DOWN - 8000
+    jw = np.arange(m, dtype="int64")
+    return [
+        (mid, int(rate) * _RS_DOWN // _RS_UP, m, int(y.sum()),
+         int((y * y).sum()), int(y.min()), int(y.max()), int((y * jw).sum()))
+    ]
 
 
 def _audio_resample_oracle() -> str:
@@ -8283,5 +7125,94 @@ def _audio_resample_oracle() -> str:
     """
 
 
-register("multimodal_audio_resample", _q_audio_resample,
-         oracle=_audio_resample_oracle())
+# ------------------------------------------------------------ codec table
+# One row per codec entry, in registration order.  Derived entries
+# (histogram equalization, decimation, normalization, resampling,
+# tiling) reuse their source codec's payload function; the two image
+# hashes are fingerprint rows whose pair stage is the graded entry.
+CODECS: dict[str, CodecSpec] = {
+    spec.name: spec
+    for spec in (
+        CodecSpec("multimodal_ppm_decode", _N_PPM, _ppm_payload, _ppm_stats,
+                  _PPM_SCHEMA, _PPM_ORACLE),
+        CodecSpec("multimodal_wav_decode", _N_WAV, _wav_payload,
+                  _pcm_stats(decode_wav), _WAV_SCHEMA, _WAV_ORACLE),
+        CodecSpec("multimodal_bmp_decode", _N_BMP, _bmp_payload, _bmp_stats,
+                  _BMP_SCHEMA, _BMP_ORACLE),
+        CodecSpec("multimodal_png_decode", _N_PNG, _png_payload, _png_stats,
+                  _PNG_SCHEMA, _PNG_ORACLE),
+        CodecSpec("multimodal_y4m_frames", _N_Y4M, _y4m_payload, _y4m_stats,
+                  _Y4M_SCHEMA, _Y4M_ORACLE, sort=("media_id", "frame_idx")),
+        CodecSpec("multimodal_gif_decode", _N_GIF, _gif_payload, _gif_stats,
+                  _GIF_SCHEMA, _GIF_ORACLE),
+        CodecSpec("multimodal_jpeg_decode", _N_JPEG, _jpeg_payload,
+                  _jpeg_stats, _JPEG_SCHEMA, _JPEG_ORACLE),
+        CodecSpec("multimodal_adpcm_decode", _N_ADPCM, _adpcm_payload,
+                  _adpcm_stats, _ADPCM_SCHEMA, _ADPCM_ORACLE),
+        CodecSpec("multimodal_jpeg_ac_decode", _N_JPEG_AC, _jpeg_ac_payload,
+                  _jpeg_ac_stats, _JPEG_SCHEMA, _JPEG_AC_ORACLE),
+        CodecSpec("multimodal_g711_decode", _N_G711, _g711_payload,
+                  _g711_stats, _G711_SCHEMA, _G711_ORACLE),
+        CodecSpec("multimodal_scene_cut", _N_SCENE, _scene_payload,
+                  _scene_stats, _SCENE_SCHEMA, _SCENE_ORACLE),
+        CodecSpec("multimodal_audio_energy", _N_AUDIO_E, _audio_e_payload,
+                  _audio_e_stats, _AUDIO_E_SCHEMA, _AUDIO_E_ORACLE),
+        CodecSpec("multimodal_tiff_decode", _N_TIFF, _tiff_payload,
+                  _tiff_stats, _TIFF_SCHEMA, _tiff_oracle()),
+        CodecSpec("multimodal_qoi_decode", _N_QOI, _qoi_payload,
+                  _rgba_stats(decode_qoi), _RGBA_SCHEMA, _qoi_oracle()),
+        CodecSpec("multimodal_exif_parse", _N_JPEG, _exif_payload,
+                  _exif_stats, _EXIF_SCHEMA, _exif_oracle()),
+        CodecSpec("multimodal_tga_decode", _N_TGA, _tga_payload,
+                  _rgba_stats(decode_tga), _RGBA_SCHEMA, _tga_oracle()),
+        CodecSpec("dedup_image_ahash", len(_AHASH_COEFFS), _ahash_payload,
+                  _ahash_stats, _FINGERPRINT_SCHEMA, _ahash_oracle(),
+                  sort=(), pairs=_ahash_pairs),
+        CodecSpec("dedup_image_phash", _PHASH_N, _phash_payload,
+                  _phash_stats, _FINGERPRINT_SCHEMA, _phash_oracle(),
+                  sort=(), pairs=_phash_pairs),
+        CodecSpec("multimodal_hist_equalize", _N_TGA, _tga_payload,
+                  _hist_eq_stats, _HIST_EQ_SCHEMA, _hist_eq_oracle()),
+        CodecSpec("multimodal_audio_decimate", _N_WAV, _wav_payload,
+                  _audio_decimate_stats, _RATE_OUT_SCHEMA,
+                  _audio_decimate_oracle()),
+        CodecSpec("multimodal_pcx_decode", _N_PCX, _pcx_payload,
+                  _rgba_stats(decode_pcx), _RGBA_SCHEMA, _pcx_oracle()),
+        CodecSpec("multimodal_image_tile", _N_PCX, _pcx_payload,
+                  _image_tile_stats, _TILE_SCHEMA, _image_tile_oracle(),
+                  sort=("media_id", "tile_y", "tile_x")),
+        CodecSpec("multimodal_audio_normalize", _N_WAV, _wav_payload,
+                  _audio_normalize_stats, _NORM_SCHEMA,
+                  _audio_normalize_oracle()),
+        CodecSpec("multimodal_sunras_decode", _N_RAS, _ras_payload,
+                  _rgba_stats(decode_sunras), _RGBA_SCHEMA, _sunras_oracle()),
+        CodecSpec("multimodal_ico_decode", _N_ICO, _ico_payload, _ico_stats,
+                  _ICO_SCHEMA, _ICO_ORACLE),
+        CodecSpec("multimodal_audio_downmix", _N_DOWNMIX, _stereo_payload,
+                  _downmix_stats, _DOWNMIX_SCHEMA, _DOWNMIX_ORACLE),
+        CodecSpec("multimodal_au_decode", _N_AU, _au_payload, _au_stats,
+                  _G711_SCHEMA, _AU_ORACLE),
+        CodecSpec("multimodal_xbm_decode", _N_XBM, _xbm_payload, _xbm_stats,
+                  _XBM_SCHEMA, _xbm_oracle()),
+        CodecSpec("multimodal_aiff_decode", _N_AIFF, _aiff_payload,
+                  _pcm_stats(decode_aiff), _WAV_SCHEMA, _aiff_oracle()),
+        CodecSpec("multimodal_flac_decode", _N_FLAC, _flac_payload,
+                  _pcm_stats(decode_flac), _WAV_SCHEMA, _flac_oracle()),
+        CodecSpec("multimodal_audio_resample", _N_WAV, _wav_payload,
+                  _audio_resample_stats, _RATE_OUT_SCHEMA,
+                  _audio_resample_oracle()),
+    )
+}
+
+
+def _codec_entry(spec: CodecSpec):
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        df = codec_frame(spark, spec)
+        return spec.pairs(df) if spec.pairs else df
+
+    run.__name__ = f"query_{spec.name}"
+    return run
+
+
+for _spec in CODECS.values():
+    register(_spec.name, _codec_entry(_spec), oracle=_spec.oracle)

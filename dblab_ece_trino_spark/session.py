@@ -306,7 +306,15 @@ def shared_build(name: str) -> Callable[[Callable], Callable]:
             key = (name, *list(bound.arguments.values())[1:])
             per = _SHARED.setdefault(spark, {})
             if key not in per:
+                before = set(_CHECKPOINTED_RDD_IDS)
                 per[key] = fn(spark, *args, **kwargs)
+                # keep only the checkpoints a cached build's frames read;
+                # the build's dead intermediates would otherwise hold
+                # executor storage for the life of the session
+                _release(
+                    spark,
+                    _CHECKPOINTED_RDD_IDS - before - _checkpoints_read(per.values()),
+                )
             return per[key]
 
         SHARED_BUILDS[name] = build
@@ -317,22 +325,39 @@ def shared_build(name: str) -> Callable[[Callable], Callable]:
 
 def drop_shared_builds(spark: SparkSession, *names: str) -> None:
     """Forget ``spark``'s cached builds of the named kinds, unpersisting
-    each checkpoint materialize() made for them first: forgetting the
-    reference alone leaves the blocks in executor storage until JVM GC,
-    and that memory pressure biases whatever runs next."""
+    the checkpoints they read first: forgetting the reference alone
+    leaves the blocks in executor storage until JVM GC, and that memory
+    pressure biases whatever runs next."""
     per = _SHARED.get(spark, {})
-    for key in [k for k in per if k[0] in names]:
-        built = per.pop(key)
+    dropped = [per.pop(k) for k in [k for k in per if k[0] in names]]
+    _release(spark, _checkpoints_read(dropped) - _checkpoints_read(per.values()))
+
+
+def _checkpoints_read(builds) -> set:
+    """Ids of the materialize() checkpoints that the DataFrames of
+    ``builds`` read: the LogicalRDD leaves of their optimized plans (a
+    build may return a raw scan or a projection beside its checkpoints)."""
+    ids = set()
+    for built in builds:
         for df in built if isinstance(built, tuple) else (built,):
             if not isinstance(df, DataFrame):
                 continue
-            # unpersist the checkpoint RDD under the LogicalRDD itself:
-            # df.rdd would wrap it in a fresh RDD whose unpersist is a
-            # no-op on the blocks
-            plan = df._jdf.queryExecution().optimizedPlan()
-            if plan.getClass().getSimpleName() != "LogicalRDD":
-                continue
-            rdd = plan.rdd()
-            if rdd.id() in _CHECKPOINTED_RDD_IDS:
-                _CHECKPOINTED_RDD_IDS.discard(rdd.id())
-                rdd.unpersist(False)
+            leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+            it = leaves.iterator()
+            while it.hasNext():
+                leaf = it.next()
+                if leaf.getClass().getSimpleName() == "LogicalRDD":
+                    ids.add(leaf.rdd().id())
+    return ids & _CHECKPOINTED_RDD_IDS
+
+
+def _release(spark: SparkSession, ids: set) -> None:
+    """Unpersist the materialize() checkpoints ``ids`` and forget them.
+    The checkpoint RDD is looked up by id: df.rdd would wrap it in a
+    fresh RDD whose unpersist is a no-op on the blocks."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in ids:
+        _CHECKPOINTED_RDD_IDS.discard(rid)
+        rdd = persistent.get(rid)
+        if rdd is not None:
+            rdd.unpersist(False)

@@ -68,7 +68,6 @@ def expected_rows() -> list:
         _N_SCENE,
         _SCENE_PARAMS,
         SCENE_CUT_MAD,
-        _scene_payloads,
         _scene_y,
         encode_y4m,
     )

@@ -69,9 +69,9 @@ PLAN_BUDGETS = {
     # one materialized daily aggregate; grid/pair joins re-read the
     # checkpoint (the 6 'scans' are ExistingRDD re-reads, 1 parquet)
     'ts_pairwise_correlation': (6, 12, 0, 6),
-    'multimodal_pcx_decode': (0, 2, 0, 2),
-    'multimodal_image_tile': (0, 2, 0, 2),
-    'multimodal_audio_normalize': (0, 2, 0, 2),
+    'multimodal_pcx_decode': (0, 0, 0, 1),
+    'multimodal_image_tile': (0, 0, 0, 1),
+    'multimodal_audio_normalize': (0, 0, 0, 1),
     # r15: corpus codes + (mn,mx) from shared_quant_build — the
     # per-entry corpus scan+agg collapsed into the shared checkpoint
     'sim_knn_classify': (4, 2, 2, 4),
@@ -108,9 +108,9 @@ PLAN_BUDGETS = {
     # one scan -> (old,new) grid agg -> per-old rollup
     'wh_partition_evolution': (1, 3, 0, 1),
     # generated fixtures -> one Arrow mapInPandas pass each
-    'multimodal_ico_decode': (0, 1, 0, 1),
-    'multimodal_audio_downmix': (0, 1, 0, 1),
-    'multimodal_sunras_decode': (0, 2, 0, 2),
+    'multimodal_ico_decode': (0, 0, 0, 1),
+    'multimodal_audio_downmix': (0, 0, 0, 1),
+    'multimodal_sunras_decode': (0, 0, 0, 1),
     # distributed top-k (TakeOrderedAndProject) + rank over 20 rows
     'text_vocab_drift': (2, 2, 2, 2),
     'graph_degree_distribution': (2, 6, 0, 2),
@@ -139,10 +139,10 @@ PLAN_BUDGETS = {
     'llm_vocab_topk': (1, 2, 1, 0),
     'multimodal_features': (1, 0, 0, 0),
     'multimodal_frame_sample': (1, 0, 0, 0),
-    'multimodal_bmp_decode': (0, 1, 0, 1),
-    'multimodal_ppm_decode': (0, 1, 0, 1),
+    'multimodal_bmp_decode': (0, 0, 0, 1),
+    'multimodal_ppm_decode': (0, 0, 0, 1),
     'multimodal_resize': (1, 0, 0, 0),
-    'multimodal_wav_decode': (0, 1, 0, 1),
+    'multimodal_wav_decode': (0, 0, 0, 1),
     'op_abc_pareto': (4, 7, 1, 2),
     'op_agg_cube': (1, 1, 0, 0),
     'op_agg_filter_clause': (1, 3, 0, 1),
@@ -252,23 +252,23 @@ PLAN_BUDGETS = {
     # r7 literal-reference-SQL entries: generator-backed (Range sources,
     # so zero storage scans); ref_q005's chained EXCEPT is the exchange/
     # sort-heavy one by construction
-    'multimodal_png_decode': (0, 1, 0, 1),
-    'multimodal_y4m_frames': (0, 1, 0, 1),
+    'multimodal_png_decode': (0, 0, 0, 1),
+    'multimodal_y4m_frames': (0, 0, 0, 1),
     # the 4 'scans' are ExistingRDD reads of the ONE materialized hv
     # frame (md5 fold + DISTINCT runs once, localCheckpoint); the
     # parquet scan happens at materialize time — pure-SQL form measured
     # 4 parquet scans / 10 exchanges and 6.0s vs 2.2s at sf0.1
     'op_kmv_distinct': (4, 5, 2, 4),
-    'multimodal_adpcm_decode': (0, 1, 0, 1),
-    'multimodal_g711_decode': (0, 1, 0, 1),
-    'multimodal_scene_cut': (0, 1, 0, 1),
-    'multimodal_audio_energy': (0, 1, 0, 1),
-    'multimodal_qoi_decode': (0, 1, 0, 1),
-    'multimodal_tiff_decode': (0, 1, 0, 1),
-    'multimodal_exif_parse': (0, 1, 0, 1),
-    'multimodal_jpeg_ac_decode': (0, 1, 0, 1),
-    'multimodal_gif_decode': (0, 1, 0, 1),
-    'multimodal_jpeg_decode': (0, 1, 0, 1),
+    'multimodal_adpcm_decode': (0, 0, 0, 1),
+    'multimodal_g711_decode': (0, 0, 0, 1),
+    'multimodal_scene_cut': (0, 0, 0, 1),
+    'multimodal_audio_energy': (0, 0, 0, 1),
+    'multimodal_qoi_decode': (0, 0, 0, 1),
+    'multimodal_tiff_decode': (0, 0, 0, 1),
+    'multimodal_exif_parse': (0, 0, 0, 1),
+    'multimodal_jpeg_ac_decode': (0, 0, 0, 1),
+    'multimodal_gif_decode': (0, 0, 0, 1),
+    'multimodal_jpeg_decode': (0, 0, 0, 1),
     'ref_q001': (0, 1, 0, 0),
     'ref_q002': (0, 1, 0, 0),
     'ref_q003': (0, 1, 0, 0),
@@ -296,20 +296,20 @@ PLAN_BUDGETS = {
     # branches (sharded-rank machinery; no single-partition window)
     'sample_systematic': (3, 4, 1, 2),
     'op_moments_profile': (1, 3, 1, 2),
-    'multimodal_tga_decode': (0, 1, 0, 1),
-    'dedup_image_ahash': (0, 2, 0, 1),
+    'multimodal_tga_decode': (0, 0, 0, 1),
+    'dedup_image_ahash': (0, 0, 0, 1),
     # 3 scans inherent to the shared I/U/D log build (cdc precedent)
     'wh_vacuum_planner': (3, 3, 1, 2),
     # 4-point sweep re-reads the materialized index/bf/query frames
     # per point (one build, nested probe sets)
     # r16: one scored frame for all probe points
     'sim_ivf_probe_sweep': (8, 16, 5, 17),
-    'multimodal_hist_equalize': (0, 1, 0, 1),
+    'multimodal_hist_equalize': (0, 0, 0, 1),
     'llm_bpe_compression_curve': (2, 2, 0, 1),
     # du CTE inlined into the dau / mau / max-day branches (3 scans of
     # the narrow distinct projection; the wide payload reduces first)
     'op_user_stickiness': (3, 7, 0, 1),
-    'multimodal_audio_decimate': (0, 1, 0, 1),
+    'multimodal_audio_decimate': (0, 0, 0, 1),
     'op_top_paths': (1, 2, 1, 2),
     # per-round materialize keeps the 10-iteration power method's
     # lineage flat (the HITS/label-prop discipline)
@@ -410,10 +410,10 @@ PLAN_BUDGETS = {
     # correlated scalar x2 + EXISTS decorrelate into joins; the spend
     # CTE is re-derived per decorrelated branch (Catalyst inlines CTEs)
     'op_correlated_subquery': (8, 8, 0, 4),
-    'multimodal_au_decode': (0, 1, 0, 1),
-    'multimodal_xbm_decode': (0, 1, 0, 1),
-    'multimodal_aiff_decode': (0, 1, 0, 1),
-    'multimodal_flac_decode': (0, 1, 0, 1),
+    'multimodal_au_decode': (0, 0, 0, 1),
+    'multimodal_xbm_decode': (0, 0, 0, 1),
+    'multimodal_aiff_decode': (0, 0, 0, 1),
+    'multimodal_flac_decode': (0, 0, 0, 1),
     # 2 docs scans (ledger-quality join + corpus annotate) + the
     # ExistingRDD reads of the shared materialized labels/keepers
     'pipeline_dedup_corpus': (4, 3, 1, 2),
@@ -461,7 +461,7 @@ PLAN_BUDGETS = {
     'dedup_chunk_neardup': (2, 4, 0, 1),
     # r16: bounded driver kernel — one ExistingRDD scan + output sort
     'ts_holt_trend': (1, 1, 0, 1),
-    'multimodal_audio_resample': (0, 1, 0, 1),
+    'multimodal_audio_resample': (0, 0, 0, 1),
     'sample_epoch_shuffle': (2, 4, 0, 3),
     # round-15 ops.  ts_holtwinters: recursive-CTE triple smoothing on
     # the materialized daily rollup + pivot init (the ts_holt_trend
@@ -475,7 +475,7 @@ PLAN_BUDGETS = {
     # twice (totals + final), metadata-scale after the first agg.
     # r16: bounded driver kernel — one ExistingRDD scan + output sort
     'ts_holtwinters': (1, 1, 0, 1),
-    'dedup_image_phash': (4, 2, 0, 1),
+    'dedup_image_phash': (4, 0, 0, 1),
     'dedup_cdc_chunks': (2, 4, 0, 1),
     'op_anova': (2, 4, 0, 1),
     # HyperANF: 4 reads of the materialized per-round register states

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import SF_SMALL
 
 
@@ -357,10 +359,39 @@ def test_drop_shared_builds_forces_rebuild_of_named_only(spark):
     assert shared_price_cum(spark, SF_SMALL) is price
 
 
+@pytest.mark.parametrize("name", ["ivf_build", "minhash_clusters"])
+def test_shared_build_keeps_only_the_checkpoints_it_returns(spark, name):
+    """A build's intermediate checkpoints are released when it finishes:
+    storage grows by exactly the checkpoints its returned frames read,
+    and dropping the build leaves none of them.  Both builds checkpoint
+    frames they never return (IVF's vector frame and Lloyd rounds; the
+    LSH pipeline's signatures, candidates and estimates).  The last
+    check is a subset, not equality: Spark's context cleaner may
+    unpersist an earlier test's unreferenced checkpoint meanwhile."""
+    from dblab_ece_trino_spark.operators.registry import spark_queries
+    from dblab_ece_trino_spark.session import (
+        SHARED_BUILDS,
+        _checkpoints_read,
+        drop_shared_builds,
+    )
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    spark_queries()  # imports every operator module
+    other = spark.newSession()  # a fresh build; spark's cache is untouched
+    before = persisted()
+    built = SHARED_BUILDS[name](other, SF_SMALL)
+    read = _checkpoints_read([built])
+    assert read and persisted() - before == read
+    drop_shared_builds(other, name)
+    assert persisted() <= before
+
+
 def test_shared_build_names_are_the_bench_record_labels():
     """bench.py records one time per registered build under its name;
     scripts/bench_diff.py compares those keys across records (see
-    BENCH_LOCAL_r18.json), so the names must not drift."""
+    BENCH_LOCAL_r17_c8_driver.json), so the names must not drift."""
     from dblab_ece_trino_spark.operators.registry import spark_queries
     from dblab_ece_trino_spark.session import SHARED_BUILDS
 

@@ -124,19 +124,17 @@ def test_qoi_hand_written_stream_decodes():
     assert np.array_equal(arr, want)
 
 
-def test_qoi_fixtures_match_independent_decoder(spark):
+def test_qoi_fixtures_match_independent_decoder():
     """Every fixture payload must decode identically through the
     independent spec reimplementation (scripts/gen_qoi_expected.py)."""
     import numpy as np
 
-    from dblab_ece_trino_spark.operators.multimodal import (
-        _qoi_payloads,
-        decode_qoi,
-    )
+    from dblab_ece_trino_spark.operators.multimodal import CODECS, decode_qoi
     from scripts.gen_qoi_expected import ref_decode
 
-    for r in _qoi_payloads(spark).collect():
-        payload = bytes(r.payload)
+    spec = CODECS["multimodal_qoi_decode"]
+    for i in range(spec.n):
+        payload = spec.payload(i)
         w, h, ch, arr = decode_qoi(payload)
         rw, rh, rch, pix = ref_decode(payload)
         assert (w, h, ch) == (rw, rh, rch)
@@ -146,15 +144,16 @@ def test_qoi_fixtures_match_independent_decoder(spark):
         assert full.reshape(-1, 4).tolist() == [list(p) for p in pix]
 
 
-def test_qoi_fixture_family_exercises_every_op(spark):
+def test_qoi_fixture_family_exercises_every_op():
     """The graded family must collectively contain all six chunk
     types (RGB, RGBA, INDEX, DIFF, LUMA, RUN) — otherwise the fixtures
     under-test the decoder."""
-    from dblab_ece_trino_spark.operators.multimodal import _qoi_payloads
+    from dblab_ece_trino_spark.operators.multimodal import CODECS
 
+    spec = CODECS["multimodal_qoi_decode"]
     seen = set()
-    for r in _qoi_payloads(spark).collect():
-        body = bytes(r.payload)[14:-8]
+    for k in range(spec.n):
+        body = spec.payload(k)[14:-8]
         i = 0
         while i < len(body):
             op = body[i]
@@ -788,39 +787,35 @@ def test_tga_roundtrip_both_orientations_and_types():
             assert np.array_equal(arr, rng_img), (rle, topdown)
 
 
-def test_tga_fixtures_match_independent_decoder(spark):
+def test_tga_fixtures_match_independent_decoder():
     """Every fixture payload must decode identically through the
     independent spec reimplementation (scripts/gen_tga_expected.py)."""
     import numpy as np
 
-    from dblab_ece_trino_spark.operators.multimodal import (
-        _tga_payloads,
-        decode_tga,
-    )
+    from dblab_ece_trino_spark.operators.multimodal import CODECS, decode_tga
     from scripts.gen_tga_expected import ref_decode
 
-    for r in _tga_payloads(spark).collect():
-        payload = bytes(r.payload)
+    spec = CODECS["multimodal_tga_decode"]
+    for i in range(spec.n):
+        payload = spec.payload(i)
         w, h, ch, arr = decode_tga(payload)
         rw, rh, rch, pix = ref_decode(payload)
         assert (w, h, ch) == (rw, rh, rch)
         assert arr.reshape(-1, ch).tolist() == [list(p) for p in pix]
 
 
-def test_tga_fixture_family_covers_the_format(spark):
+def test_tga_fixture_family_covers_the_format():
     """The graded family must collectively contain both image types,
     both bit depths, both row orders, and (in the RLE members) both
     packet kinds — otherwise the fixtures under-test the decoder."""
     import struct
 
-    from dblab_ece_trino_spark.operators.multimodal import (
-        _TGA_FOOTER,
-        _tga_payloads,
-    )
+    from dblab_ece_trino_spark.operators.multimodal import CODECS, _TGA_FOOTER
 
+    spec = CODECS["multimodal_tga_decode"]
     seen = set()
-    for r in _tga_payloads(spark).collect():
-        payload = bytes(r.payload)
+    for i in range(spec.n):
+        payload = spec.payload(i)
         hdr = struct.unpack("<BBBHHBHHHHBB", payload[:18])
         itype, w, h, bpp, desc = hdr[2], hdr[8], hdr[9], hdr[10], hdr[11]
         seen.add(("type", itype))
@@ -893,12 +888,12 @@ def test_image_ahash_matches_pure_python(spark):
     import numpy as np
 
     from dblab_ece_trino_spark.operators.multimodal import (
+        CODECS,
         _AHASH_COEFFS,
         _ahash_gray,
-        _ahash_payloads,
-        _q_image_ahash,
-        ahash_fingerprints,
+        codec_frame,
     )
+    from dblab_ece_trino_spark.operators.registry import spark_queries
 
     # independent hash: explicit per-block double loop, no reshape
     def ref_hash(g):
@@ -914,14 +909,14 @@ def test_image_ahash_matches_pure_python(spark):
 
     got = {
         r.media_id: (r.hash_hi, r.hash_lo)
-        for r in ahash_fingerprints(_ahash_payloads(spark)).collect()
+        for r in codec_frame(spark, CODECS["dedup_image_ahash"]).collect()
     }
     want = {i: ref_hash(_ahash_gray(i).astype(np.int64))
             for i in range(len(_AHASH_COEFFS))}
     assert got == want
 
     pairs = {(r.media_a, r.media_b): (r.hamming, r.is_dup)
-             for r in _q_image_ahash(spark, "").collect()}
+             for r in spark_queries()["dedup_image_ahash"](spark, "").collect()}
     assert len(pairs) == 28
     for (a, b), (ham, dup) in pairs.items():
         if (a, b) in ((0, 4), (1, 5)):
@@ -1036,10 +1031,8 @@ def test_hist_equalize_matches_pure_python(spark):
     [0, 255] range."""
     import numpy as np
 
-    from dblab_ece_trino_spark.operators.multimodal import (
-        _TGA_PARAMS,
-        _q_hist_equalize,
-    )
+    from dblab_ece_trino_spark.operators.multimodal import _TGA_PARAMS
+    from dblab_ece_trino_spark.operators.registry import spark_queries
 
     def pixel(i, x, y, w):
         band = (4 * x) // w
@@ -1070,7 +1063,8 @@ def test_hist_equalize_matches_pure_python(spark):
         )
         assert int(o.min()) == 0 and int(o.max()) == 255
 
-    got = [tuple(r) for r in _q_hist_equalize(spark, "").collect()]
+    entry = spark_queries()["multimodal_hist_equalize"]
+    got = [tuple(r) for r in entry(spark, "").collect()]
     assert got == want
 
 
@@ -1443,8 +1437,9 @@ def test_hist_equalize_constant_image_guard(spark):
     import numpy as np
 
     from dblab_ece_trino_spark.operators.multimodal import (
+        CODECS,
+        decode_stats,
         encode_tga,
-        hist_equalize_stats,
     )
 
     img = np.full((5, 7, 3), 42, dtype=np.uint8)
@@ -1452,7 +1447,7 @@ def test_hist_equalize_constant_image_guard(spark):
     df = spark.createDataFrame(
         [(0, bytearray(payload))], "media_id long, payload binary"
     )
-    rows = hist_equalize_stats(df).collect()
+    rows = decode_stats(df, CODECS["multimodal_hist_equalize"]).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.width, r.height) == (7, 5)

@@ -276,10 +276,7 @@ def test_pcx_fixtures_match_independent_decoder(spark):
     independent pure-Python RLE walker (no numpy slicing tricks)."""
     import numpy as np
 
-    from dblab_ece_trino_spark.operators.multimodal import (
-        _PCX_PARAMS,
-        _pcx_payloads,
-    )
+    from dblab_ece_trino_spark.operators.multimodal import CODECS, _PCX_PARAMS
 
     def pure_decode(p):
         import struct
@@ -300,13 +297,14 @@ def test_pcx_fixtures_match_independent_decoder(spark):
                 for x in range(w)] for y in range(h)]
         return w, h, img
 
-    rows = _pcx_payloads(spark).collect()
-    assert len(rows) == len(_PCX_PARAMS)
+    spec = CODECS["multimodal_pcx_decode"]
+    assert spec.n == len(_PCX_PARAMS)
     from dblab_ece_trino_spark.operators.multimodal import decode_pcx
 
-    for r in rows:
-        w, h, img = pure_decode(bytes(r.payload))
-        w2, h2, _ch, arr = decode_pcx(bytes(r.payload))
+    for i in range(spec.n):
+        payload = spec.payload(i)
+        w, h, img = pure_decode(payload)
+        w2, h2, _ch, arr = decode_pcx(payload)
         assert (w, h) == (w2, h2)
         assert np.array_equal(arr, np.array(img, dtype=np.uint8))
 
@@ -316,13 +314,11 @@ def test_image_tile_matches_pure_python(spark):
     every fixture, including truncated edge tiles."""
     import numpy as np
 
-    from dblab_ece_trino_spark.operators.multimodal import (
-        _PCX_PARAMS,
-        _pcx_pixel,
-        _q_image_tile,
-    )
+    from dblab_ece_trino_spark.operators.multimodal import _PCX_PARAMS, _pcx_pixel
+    from dblab_ece_trino_spark.operators.registry import spark_queries
 
-    got = [tuple(r) for r in _q_image_tile(spark, "").collect()]
+    entry = spark_queries()["multimodal_image_tile"]
+    got = [tuple(r) for r in entry(spark, "").collect()]
     want = []
     for i, (w, h) in enumerate(_PCX_PARAMS):
         yy, xx = np.mgrid[0:h, 0:w]
@@ -345,13 +341,11 @@ def test_audio_normalize_matches_pure_python(spark):
     peak_out == target whenever the gain divides exactly."""
     import numpy as np
 
-    from dblab_ece_trino_spark.operators.multimodal import (
-        _N_WAV,
-        _NORM_TARGET,
-        _q_audio_normalize,
-    )
+    from dblab_ece_trino_spark.operators.multimodal import _N_WAV, _NORM_TARGET
+    from dblab_ece_trino_spark.operators.registry import spark_queries
 
-    got = [tuple(r) for r in _q_audio_normalize(spark, "").collect()]
+    entry = spark_queries()["multimodal_audio_normalize"]
+    got = [tuple(r) for r in entry(spark, "").collect()]
     assert len(got) == _N_WAV
     want = []
     for i in range(_N_WAV):
@@ -844,8 +838,8 @@ def test_sunras_error_contracts_and_fixtures(spark):
     import pytest as _pt
 
     from dblab_ece_trino_spark.operators.multimodal import (
+        CODECS,
         _RAS_PARAMS,
-        _ras_payloads,
         decode_sunras,
         encode_sunras,
     )
@@ -890,11 +884,12 @@ def test_sunras_error_contracts_and_fixtures(spark):
                 for x in range(w)] for y in range(h)]
         return w, h, img
 
-    rows = _ras_payloads(spark).collect()
-    assert len(rows) == len(_RAS_PARAMS)
-    for r in rows:
-        w, h, img = pure_decode(bytes(r.payload))
-        w2, h2, _ch, arr = decode_sunras(bytes(r.payload))
+    spec = CODECS["multimodal_sunras_decode"]
+    assert spec.n == len(_RAS_PARAMS)
+    for i in range(spec.n):
+        payload = spec.payload(i)
+        w, h, img = pure_decode(payload)
+        w2, h2, _ch, arr = decode_sunras(payload)
         assert (w, h) == (w2, h2)
         assert np.array_equal(arr, np.array(img, dtype=np.uint8))
 

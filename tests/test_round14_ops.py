@@ -275,12 +275,13 @@ def test_audio_resample_linear_ramp_identity(spark):
     """On a pure linear ramp, linear interpolation is EXACT: resampling
     s_k = 5k means the interpolated value at phase 8j/5 equals 8j.
     Driven END-TO-END through the operator (encode_wav payload ->
-    audio_resample_stats), so a phase-accumulator or offset-trick
+    the resample row function), so a phase-accumulator or offset-trick
     regression in the shipped code fails here, plus the tiny-clip
     guard (a 2-sample clip yields no output row, like the oracle's
     empty generate_series)."""
     from dblab_ece_trino_spark.operators.multimodal import (
-        audio_resample_stats,
+        CODECS,
+        decode_stats,
         encode_wav,
     )
 
@@ -293,7 +294,8 @@ def test_audio_resample_linear_ramp_identity(spark):
          (1, bytearray(encode_wav(np.array([7, -7]), 8000)))],
         "media_id long, payload binary",
     )
-    rows = {r.media_id: r for r in audio_resample_stats(media).collect()}
+    spec = CODECS["multimodal_audio_resample"]
+    rows = {r.media_id: r for r in decode_stats(media, spec).collect()}
     assert set(rows) == {0}  # the 2-sample clip is omitted, not a crash
     r = rows[0]
     assert (r.n_out, r.sum_out, r.sumsq_out, r.min_out, r.max_out,

@@ -755,7 +755,7 @@ def test_scene_cut_engine_matches_independent_reference():
             lambda f, x, y, i=i: (2 * x + y + 5 * i) % 256,
             c420=c420,
         )
-        # engine-path recomputation (same loop scene_cut_stats runs)
+        # engine-path recomputation (same loop _scene_stats runs)
         pw, ph, _n, _d, _c, _hdr = parse_y4m_header(payload)
         prev = None
         n_frames = n_cuts = 0

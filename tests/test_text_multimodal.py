@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+from dblab_ece_trino_spark.operators.multimodal import CODECS
 from tests.conftest import SF_SMALL
 
 
@@ -911,3 +914,39 @@ def test_jpeg_malformed_segments_raise_valueerror_and_fill_bytes_ok():
     w2, h2, arr2 = decode_jpeg(noisy)
     assert (w2, h2) == ref[:2]
     assert np.array_equal(arr2, ref[2])
+
+
+# ------------------------------------------------------- codec spec table
+@pytest.mark.parametrize("name", list(CODECS))
+def test_codec_entry_runs_one_python_operator_in_one_task(spark, name):
+    """Every codec row generates and decodes in ONE Python operator over
+    ONE partition, so the sort needs no exchange.  Fingerprint rows are
+    checked at their fingerprint frame; the pair stage joins it."""
+    from dblab_ece_trino_spark.operators.multimodal import codec_frame
+    from dblab_ece_trino_spark.operators.registry import spark_queries
+
+    spec = CODECS[name]
+    df = (
+        codec_frame(spark, spec) if spec.pairs
+        else spark_queries()[name](spark, SF_SMALL)
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == 1, plan
+    assert "Exchange" not in plan, plan
+    assert re.search(r"\bRange \(0, \d+, step=1, splits=1\)", plan), plan
+
+
+def test_codec_table_covers_every_media_entry():
+    """Every registered multimodal_* entry and both image-hash entries
+    run through the codec table, except the three document-backed
+    plumbing entries."""
+    from dblab_ece_trino_spark.operators.registry import spark_queries
+
+    media = {n for n in spark_queries() if n.startswith("multimodal_")}
+    media |= {"dedup_image_ahash", "dedup_image_phash"}
+    doc_backed = {
+        "multimodal_features", "multimodal_frame_sample", "multimodal_resize",
+    }
+    assert media - doc_backed == set(CODECS)
+    assert not doc_backed & set(CODECS)
+
